@@ -5,11 +5,32 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.raster._
 
 /** The >4 GiB BigTIFF write→read property. Isolated in its own suite (and,
-  * via build.sbt testGrouping, its own forked JVM): it holds one 4.3 GB
-  * pixel array on each side of the round-trip, and running that inside the
+  * via build.sbt testGrouping, its own forked JVM): each side of the
+  * round-trip allocates one 4.3 GB pixel array, and running that inside the
   * shared Spark test JVM stalls the session's RPC heartbeats under GC
-  * pressure. Pure codec work — no SparkSession involved. */
+  * pressure. The two arrays are live one at a time (about 4.4 GB peak heap),
+  * so the test passes at -Xmx4600m. Pure codec work — no SparkSession
+  * involved. */
 class BigTiffSoakSpec extends AnyFunSuite {
+
+  /** Writes the side² sentinel raster to `p` as a sparse tiled GeoTIFF.
+    * The write-side array lives in this frame only, so it is unreachable
+    * once this returns and the reader can allocate its own. Nulling a var
+    * in the caller does not do that: for a named-argument call such as the
+    * `GeoTiff.write` below, scalac first stores each argument in a hidden
+    * local, and that copy keeps the array alive to the end of the frame. */
+  private def writeSentinelRaster(p: String, side: Int): Unit = {
+    val npx = side * side
+    val vals = new Array[Double](npx)
+    java.util.Arrays.fill(vals, -1.0)
+    // sentinel pixels in scattered tiles, including the very last tile
+    // (so its > 4 GiB offset is really written and read back)
+    var i = 0
+    while (i < npx) { vals(i) = (i % 99991).toDouble; i += 10000019 }
+    vals(npx - 1) = 424242.0
+    GeoTiff.write(p, vals, side, side, Bbox(0, 0, side, side), 28992, -1.0,
+      tileSize = 256, sparse = true)
+  }
 
   test("a >4 GiB raster auto-upgrades to BigTIFF and reads back (sparse tiles)") {
     // 23296^2 float64 = 4.34e9 bytes of dense layout: past the classic
@@ -26,16 +47,7 @@ class BigTiffSoakSpec extends AnyFunSuite {
     try {
       val side = 91 * 256 // 23296
       val npx = side * side
-      var vals = new Array[Double](npx)
-      java.util.Arrays.fill(vals, -1.0)
-      // sentinel pixels in scattered tiles, including the very last tile
-      // (so its > 4 GiB offset is really written and read back)
-      var i = 0
-      while (i < npx) { vals(i) = (i % 99991).toDouble; i += 10000019 }
-      vals(npx - 1) = 424242.0
-      GeoTiff.write(p, vals, side, side, Bbox(0, 0, side, side), 28992, -1.0,
-        tileSize = 256, sparse = true)
-      vals = null // let the writer copy go before the reader allocates
+      writeSentinelRaster(p, side)
       val fileLen = new java.io.File(p).length()
       assert(fileLen > (1L << 32), s"file is $fileLen bytes, not >4GiB")
       val head = {
