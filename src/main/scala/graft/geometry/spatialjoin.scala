@@ -43,6 +43,25 @@ object SpatialJoin {
   private def cellId(cx: Long, cy: Long): Long =
     (cx << 32) | (cy & 0xFFFFFFFFL)
 
+  /** The (2·rings+1)² cell ids around cell (cx, cy), dx-major; fails with
+    * `overflow` when a ring cell leaves the 32-bit grid. */
+  private def ringAround(cx: Long, cy: Long, rings: Int)(
+      overflow: => String): Array[Long] = {
+    require(cx - rings >= Int.MinValue && cx + rings <= Int.MaxValue &&
+      cy - rings >= Int.MinValue && cy + rings <= Int.MaxValue, overflow)
+    val out = new Array[Long]((2 * rings + 1) * (2 * rings + 1))
+    var i = 0
+    var dx = -rings
+    while (dx <= rings) {
+      var dy = -rings
+      while (dy <= rings) {
+        out(i) = cellId(cx + dx, cy + dy); i += 1; dy += 1
+      }
+      dx += 1
+    }
+    out
+  }
+
   /** Pairs (a_fid, b_fid) whose geometries intersect (boundary contact
     * counts, JTS semantics). Inputs are geometry frames (`fid` +
     * `geometry` WKB). */
@@ -238,13 +257,9 @@ object SpatialJoin {
       cellId(cx, cy)
     }
     val ringCells = udf { (x: Double, y: Double) =>
-      val cx = math.floor(x / cellSize).toLong
-      val cy = math.floor(y / cellSize).toLong
-      require(cx - rings >= Int.MinValue && cx + rings <= Int.MaxValue &&
-        cy - rings >= Int.MinValue && cy + rings <= Int.MaxValue,
+      ringAround(math.floor(x / cellSize).toLong,
+        math.floor(y / cellSize).toLong, rings)(
         s"coordinates ($x, $y) exceed the 32-bit cell grid: raise cellSize")
-      (for (dx <- -rings to rings; dy <- -rings to rings)
-        yield cellId(cx + dx, cy + dy)).toArray
     }
     val l = centroids(left, "a_fid", "ax", "ay")
       .withColumn("cell", explode(ringCells(col("ax"), col("ay"))))
@@ -264,23 +279,9 @@ object SpatialJoin {
       if (!skewGuard) Set.empty[Long]
       else {
         val shiftCells = udf { (c: Long) =>
-          val cx = c >> 32
-          val cy = c.toInt.toLong
-          require(cx - rings >= Int.MinValue && cx + rings <= Int.MaxValue &&
-            cy - rings >= Int.MinValue && cy + rings <= Int.MaxValue,
-            s"cell ($cx, $cy) ± $rings rings exceeds the 32-bit cell " +
-              "grid: raise cellSize")
-          val out = new Array[Long]((2 * rings + 1) * (2 * rings + 1))
-          var i = 0
-          var dx = -rings
-          while (dx <= rings) {
-            var dy = -rings
-            while (dy <= rings) {
-              out(i) = cellId(cx + dx, cy + dy); i += 1; dy += 1
-            }
-            dx += 1
-          }
-          out
+          val (cx, cy) = (c >> 32, c.toInt.toLong)
+          ringAround(cx, cy, rings)(s"cell ($cx, $cy) ± $rings rings " +
+            "exceeds the 32-bit cell grid: raise cellSize")
         }
         val lCounts = centroids(left, "a_fid", "ax", "ay")
           .select(cellOf(col("ax"), col("ay")).as("cell"))

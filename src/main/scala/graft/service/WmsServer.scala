@@ -26,15 +26,7 @@ import graft.raster.{Bbox, Proj, RasterBlock, RasterRequest}
 object WmsMain {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8765)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val server = new WmsServer(spark, port).start()
     println(s"graft WMS listening on http://127.0.0.1:${server.boundPort}/wms")
     Thread.currentThread().join()

@@ -1,27 +1,15 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import graft.geometry._
 
-/** Ad-hoc measurement probe (not on any query/bench path).
-  * Usage: runMain graft.tools.Scratch [sfDir] — default /root/testdata/sf0.1.
+/** Ad-hoc probe template (not on any query or bench path): build the
+  * pipeline under study through the public API in the body, then
   *
-  * r17 shape #2: phase splits for the single-file export lanes (gpkg,
-  * dxf — VERDICT #7) and the r28 rasterize lane (VERDICT #6), plus an
-  * executor-rendered DXF variant, all interleaved in one JVM. (The
-  * evalGrams / g31-stats probes from earlier this round live in git
-  * history at commit 39c343a^.) */
+  *   runMain graft.tools.Scratch [sfDir]
+  */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    implicit val sp: SparkSession = spark
+    implicit val spark: SparkSession = graft.Sessions.local()
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     def time[T](name: String)(body: => T): T = {
       val t0 = System.nanoTime()
@@ -29,91 +17,7 @@ object Scratch {
       println(f"SCRATCH $name: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       r
     }
-    def drain(d: org.apache.spark.sql.DataFrame): Long = {
-      val it = d.toLocalIterator(); var n = 0L
-      while (it.hasNext) { it.next(); n += 1 }; n
-    }
-    graft.SparkEntry.entry(spark).count()
-
-    // ---- dxf (g27 shape): current writeStream vs phases vs exec-render
-    val dxfFrame = TableGeometrySource(s"$dir/part.parquet", "p_partkey",
-      Seq("p_size", "p_retailprice", "p_name"),
-      geomWktExpr = Some(
-        "concat('POINT (', 4.5 + (p_partkey % 50) * 0.001, ' ', " +
-          "51.9 + cast(p_partkey / 50 as int) * 0.0005, ')')"),
-      proj = "EPSG:4326").frame(GeometryRequest(mode = "centroid"))
-    val render = udf { (wkb: Array[Byte], fid: Long, pSize: java.lang.Long,
-        pRet: java.lang.Double, pName: String) =>
-      val g = GeomFunctions.readWkb(wkb)
-        .asInstanceOf[org.locationtech.jts.geom.Point]
-      val xd = new StringBuilder
-      xd.append("1001\nGRAFT\n").append(s"1000\nfid=$fid\n")
-      if (pSize != null) xd.append(s"1000\np_size=$pSize\n")
-      if (pRet != null) xd.append(s"1000\np_retailprice=$pRet\n")
-      if (pName != null) xd.append(s"1000\np_name=$pName\n")
-      s"0\nPOINT\n8\n0\n10\n${Gml.fmt(g.getX)}\n20\n${Gml.fmt(g.getY)}\n" + xd
-    }
-    for (rep <- 1 to 3) {
-      time(s"dxf writeStream (current)       #$rep") {
-        val t = java.nio.file.Files.createTempDirectory("scr_dxf")
-          .resolve("x.dxf").toString
-        DxfSink.writeStream(dxfFrame, "EPSG:4326", t)
-      }
-      time(s"dxf funnel drain only           #$rep") {
-        drain(SinkFunnel.ordered(dxfFrame, col("fid")))
-      }
-      time(s"dxf exec-render + range8 write  #$rep") {
-        val rendered = dxfFrame.select(col("fid"),
-          render(col("geometry"), col("fid"), col("p_size").cast("long"),
-            col("p_retailprice"), col("p_name")).as("txt"))
-          .repartitionByRange(8, col("fid")).sortWithinPartitions(col("fid"))
-        val t = java.nio.file.Files.createTempDirectory("scr_dxf2")
-          .resolve("x.dxf").toString
-        val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-          new java.io.FileOutputStream(t), "UTF-8"))
-        try {
-          w.write("0\nSECTION\n2\nENTITIES\n")
-          val it = rendered.toLocalIterator()
-          while (it.hasNext) w.write(it.next().getString(1))
-          w.write("0\nENDSEC\n0\nEOF\n")
-        } finally w.close()
-      }
-    }
-
-    // ---- gpkg (g17 shape): full writeStream vs drain-only (the
-    // difference = meta agg + per-row record conversion + SQLite build)
-    val sq = "concat('POLYGON ((', p_partkey % 50, ' ', cast(p_partkey / 50 as int) * 2, ', ', (p_partkey % 50) + (p_size / 10), ' ', cast(p_partkey / 50 as int) * 2, ', ', (p_partkey % 50) + (p_size / 10), ' ', (cast(p_partkey / 50 as int) * 2) + (p_size / 10), ', ', p_partkey % 50, ' ', (cast(p_partkey / 50 as int) * 2) + (p_size / 10), ', ', p_partkey % 50, ' ', cast(p_partkey / 50 as int) * 2, '))')"
-    val gpkgFrame = TableGeometrySource(s"$dir/part.parquet", "p_partkey",
-      Seq("p_size"), geomWktExpr = Some(sq))
-      .frame(GeometryRequest(mode = "centroid"))
-    for (rep <- 1 to 3) {
-      time(s"gpkg writeStream (current)      #$rep") {
-        val t = java.nio.file.Files.createTempDirectory("scr_gpkg")
-          .resolve("x.gpkg").toString
-        GeoPackageSink.writeStream(gpkgFrame, "EPSG:28992", t)
-      }
-      time(s"gpkg funnel drain only          #$rep") {
-        drain(SinkFunnel.ordered(gpkgFrame, col("fid")))
-      }
-      time(s"gpkg meta agg only              #$rep") {
-        gpkgFrame.agg(
-          min(GeomFunctions.stEnvMinX(col("geometry"))),
-          max(GeomFunctions.stEnvMaxX(col("geometry"))),
-          count(lit(1))).head()
-      }
-    }
-
-    // ---- r28 rasterize phases
-    val g = graft.QueryLib.eventsGrid(spark, dir)
-    for (rep <- 1 to 3) {
-      time(s"r28 full lane                   #$rep") {
-        graft.SparkEntry.queries("r28_rasterize")(spark, dir).count()
-      }
-      time(s"r28 feats frame only            #$rep") {
-        graft.QueryLib.customerSquares(dir, g)
-          .frame(GeometryRequest())(spark).count()
-      }
-    }
+    time("rows")(spark.read.parquet(s"$dir/events.parquet").count())
     spark.stop()
   }
 }

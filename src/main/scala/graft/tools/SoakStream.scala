@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Exactly-once soak for the DSv2 streaming watchers: lands N waves of
@@ -16,15 +15,7 @@ object SoakStream {
     // SPARK_GRAFT_MASTER=local-cluster[4,8,4096] soaks the same lanes
     // multi-JVM (separate executor processes) — the streaming write
     // commit paths under real task distribution
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]")
-    val builder = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath",
-        sys.props.getOrElse("java.class.path", ""))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     import spark.implicits._
 
     // ---------------- fgb watcher lane ----------------

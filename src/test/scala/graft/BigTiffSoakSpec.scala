@@ -71,6 +71,7 @@ class BigTiffSoakSpec extends AnyFunSuite {
     } finally {
       RequestGuards.rasterLimitPixels = prevGuard
       new java.io.File(p).delete()
+      new java.io.File(dir).delete()
     }
   }
 }

@@ -335,10 +335,10 @@ class GeometrySerdeSpec extends SparkSpec {
 
   test("bench steady lane: a throwing query yields an error marker, " +
       "never a timing (r10 ADVICE)") {
-    val (tsOk, errOk) = Bench.steadyReps(5) { () }
+    val (tsOk, errOk) = Lanes.time(5) { () }
     assert(errOk.isEmpty && tsOk.length == 5)
     var n = 0
-    val (tsBad, errBad) = Bench.steadyReps(5) {
+    val (tsBad, errBad) = Lanes.time(5) {
       n += 1
       if (n >= 3) throw new IllegalStateException("deliberate rep failure")
     }

@@ -6,15 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM-wide session). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // explicit master and cpus: the suites keep their parallelism
+    // whatever SPARK_GRAFT_CPUS/SPARK_GRAFT_MASTER the shell sets
+    val s = Sessions.local(cpus = 4, master = Some("local[4]"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,5 +1,7 @@
 #!/usr/bin/env python3
-"""Diff two SoakR14 sweep logs (JSON lines with soak_query/sec/peak_heap_mb).
+"""Diff two lane-timing logs: the JSON lines Bench, Prof lanes and Prof
+sweep print per lane (bench_query/sec/peak_heap_mb; older sweep logs
+used soak_query).
 
 Usage: compare_sweeps.py <baseline.log> <tuned.log> [topN]
 
@@ -21,8 +23,9 @@ def load(path):
                 d = json.loads(line)
             except json.JSONDecodeError:
                 continue
-            if 'soak_query' in d and d.get('sec', -1) >= 0:
-                out[d['soak_query']] = (d['sec'], d.get('peak_heap_mb', 0))
+            name = d.get('bench_query', d.get('soak_query'))
+            if name is not None and d.get('sec', -1) >= 0:
+                out[name] = (d['sec'], d.get('peak_heap_mb', 0))
     return out
 
 
