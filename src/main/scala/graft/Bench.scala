@@ -117,20 +117,15 @@ object Bench {
     // between two same-hour windows). Reported as its own JSON line.
     // Queries that errored in the main pass carry sec = -1 and are
     // excluded up front; a rep that throws INSIDE the lane marks the
-    // query errored ("sec":-1 plus an err field) instead of letting its
-    // fast failure path masquerade as a legitimate steady time.
+    // query errored (-1 in the steady map) instead of letting its fast
+    // failure path masquerade as a legitimate steady time.
     val top10 = results.filter(_._2 >= 0).toSeq.sortBy(-_._2).take(10)
     val steady = top10.map { case (name, _) =>
       val ((ts, errOpt), peak) =
         Lanes.withHeapPeak(Lanes.time(10)(Lanes.run(spark, sfDir, name)))
-      val v = if (errOpt.isDefined) -1.0 else ts.takeRight(5).min
-      val errField = errOpt.map(e => s""","err":"$e"""").getOrElse("")
-      println(s"""{"bench_steady":"$name","sec":$v,"reps":[${
-        ts.map(t => f"$t%.3f").mkString(",")}]$errField}""")
-      (name, v, peak)
+      (name, if (errOpt.isDefined) -1.0 else ts.takeRight(5).min, peak)
     }
     val steadyPeakMb = steady.map(_._3).maxOption.getOrElse(0L)
-    println(s"""{"bench_heap":{"warmup_peak_mb":$warmupPeakMb,"main_peak_mb":$mainPeakMb,"steady_peak_mb":$steadyPeakMb,"max_mb":${Runtime.getRuntime.maxMemory >> 20}}}""")
     val steadyJson = steady.map { case (k, v, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     println(s"""{"metric":"steady","unit":"sec","reps_per_query":10,"estimator":"min_of_last_5","calibration":$calibration,"calibration_mt":$calibrationMt,"main_peak_mb":$mainPeakMb,"steady_peak_mb":$steadyPeakMb,"queries":$steadyJson,"sf":"$sfDir"}""")
@@ -148,7 +143,7 @@ object Bench {
     // cope"): the max of the per-lane peaks
     val peakHeapMb =
       math.max(warmupPeakMb, math.max(mainPeakMb, steadyPeakMb))
-    val summary = s""""metric":"total","value":$total,"unit":"sec","total_timed":$total,"calibration":$calibration,"calibration_mt":$calibrationMt,"reshape_warmup":$warmupSec,"wall":$wall,"runs_per_query":2,"decorrelated_passes":true,"frame_cache_hits":$fcHits,"frame_cache_misses":$fcMisses,"peak_heap_mb":$peakHeapMb,"n_queries":${results.size},"n_errors":${errs.size},"sf":"$sfDir""""
+    val summary = s""""metric":"total","value":$total,"unit":"sec","total_timed":$total,"calibration":$calibration,"calibration_mt":$calibrationMt,"reshape_warmup":$warmupSec,"wall":$wall,"runs_per_query":2,"decorrelated_passes":true,"frame_cache_hits":$fcHits,"frame_cache_misses":$fcMisses,"peak_heap_mb":$peakHeapMb,"warmup_peak_mb":$warmupPeakMb,"n_queries":${results.size},"n_errors":${errs.size},"sf":"$sfDir""""
     // the durable record: the compact summary plus the per-query and
     // error maps, for readers whose log tail lost the bench_query lines
     try java.nio.file.Files.writeString(

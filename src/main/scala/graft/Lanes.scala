@@ -54,7 +54,7 @@ object Lanes {
     * is a no-op. A failure propagates: lanes after a failed warmup would
     * run against a cold cache. */
   def warmup(spark: SparkSession, sfDir: String): Unit = {
-    SparkEntry.entry(spark).count()
+    SparkEntry.entry(spark, sfDir).count()
     val g = QueryLib.eventsGrid(spark, sfDir)
     raster.RequestGuards.rasterLimitPixels = math.max(
       raster.RequestGuards.rasterLimitPixels, 2L * g.w * g.h)

@@ -18,10 +18,9 @@ object SparkEntry {
 
   private val Hour = 3600000L
 
-  /** Flagship query on /root/testdata/sf0.001: revenue per region per
+  /** Flagship query over the tables in `dir`: revenue per region per
     * month with a running total — joins, window agg, broadcast dims. */
-  def entry(spark: SparkSession): DataFrame = {
-    val dir = "/root/testdata/sf0.001"
+  def entry(spark: SparkSession, dir: String): DataFrame = {
     val li = tbl(spark, dir, "lineitem")
     val o = tbl(spark, dir, "orders")
     val c = tbl(spark, dir, "customer")

@@ -10,10 +10,9 @@ import graft.core.Block
   * per session and reused by every query over the same source+request —
   * the Spark-native analogue of the reference's `cached` dask graphs.
   *
-  * Bounded LRU (default 32 frames — the full bench session touches ~20
-  * distinct source-frame variants, so 16 thrashed); evicted entries are
-  * unpersisted. Scoped per SparkSession so frames never leak across
-  * sessions. Disable with `spark.graft.frameCache=false`; size with
+  * Bounded LRU (default 32 frames); evicted entries are unpersisted.
+  * Scoped per SparkSession so frames never leak across sessions. Disable
+  * with `spark.graft.frameCache=false`; size with
   * `-Dgraft.frameCache.maxEntries=N`.
   */
 object FrameCache {

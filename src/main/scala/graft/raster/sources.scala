@@ -138,8 +138,11 @@ object MemorySource {
   * (t, ty, tx). Rows where `noDataFilter` holds become nodata cells; cells
   * past the end of the table (tail padding of the last tile) are nodata.
   *
-  * The request grid must equal the native grid (identity request) — the
-  * resample path of `MemorySource` does not apply to the tabular source.
+  * The reshape runs once per session: the native grid over the full period
+  * is one `FrameCache` entry. Every other request — an aligned sub-window,
+  * a point, a stencil's haloed window off the grid edge, an off-grid,
+  * resampled or cross-CRS window — is a `WarpStage` gather from that
+  * native frame, cached under its own full-period window key.
   */
 case class TableRasterSource(
     path: String,
@@ -168,71 +171,59 @@ case class TableRasterSource(
   override def cellSize: Option[Double] = Some(1.0)
 
   override def frame(req: RasterRequest)(implicit spark: SparkSession): DataFrame = {
-    // the reshape (and the warp gather) are the expensive steps; memoize
-    // ONE full-period frame per spatial window (SURVEY §4 token-keyed
-    // cache) and serve time sub-ranges by filtering it — Snap/Shift/
-    // Resample sub-requests over the SAME window, native or warped, then
-    // reuse the cached frame instead of each paying their own gather
-    // (window containment in time; the reference re-warps per request,
-    // raster/sources.py:119-145)
+    // memoize ONE full-period frame per spatial window (SURVEY §4
+    // token-keyed cache) and serve time sub-ranges by filtering it, so
+    // Snap/Shift/Resample sub-requests over the same window share it (the
+    // reference re-warps per request, raster/sources.py:119-145); a window
+    // other than the native grid gathers from the cached native frame
     val wanted = timesIn(req.start, req.stop).map(_.toEpochMilli)
     val (p0, p1) = period.get
-    val wholeReq = req.copy(start = Some(p0), stop = Some(p1))
-    val whole = FrameCache.cached(this, wholeReq) {
-      // cross-CRS / off-grid requests route through the shared NN warp
-      // stage over the native grid (raster/sources.py:119-145 warps any
-      // source, not just the in-memory one)
-      if (WarpStage.needed(req, projection))
-        WarpStage.frame(wholeReq, projection, gridW, gridH, noDataValue,
-          allTimes.map(_.toEpochMilli), r => buildFrame(r))
-      else buildFrame(wholeReq)
-    }
+    val native = RasterRequest(extent.get, projection, gridW, gridH, Some(p0), Some(p1))
+    def nativeFrame = FrameCache.cached(this, native)(buildFrame())
+    val isNative = Proj.normalize(req.projection) == Proj.normalize(projection) &&
+      req.bbox == native.bbox && req.width == gridW && req.height == gridH
+    val window = req.copy(start = Some(p0), stop = Some(p1))
+    val whole =
+      if (isNative) nativeFrame
+      else FrameCache.cached(this, window) {
+        WarpStage.frame(window, projection, gridW, gridH, noDataValue,
+          allTimes.map(_.toEpochMilli), nativeFrame)
+      }
     if (wanted.size == frames) whole
     else whole.filter(col("t").isin(wanted: _*))
   }
 
-  private def buildFrame(req: RasterRequest)(implicit spark: SparkSession): DataFrame = {
-    // serves the native grid or any integer-aligned unit-cell subwindow of
-    // it; world anchoring: cell (x, y) covers [x, x+1]×[gridH-y-1, gridH-y]
-    val isPoint = req.bbox.isPoint
-    require(isPoint || (req.cellW == 1.0 && req.cellH == 1.0),
-      "TableRasterSource serves unit-cell-aligned requests only")
-    val bx1 = math.round(if (isPoint) math.floor(req.bbox.x1) else req.bbox.x1).toInt
-    val by2 = math.round(if (isPoint) math.ceil(req.bbox.y2) else req.bbox.y2).toInt
-    val times = timesIn(req.start, req.stop)
-    val timesMs = times.map(_.toEpochMilli)
-    val wanted = timesMs.map(t => ((t - timeFirstMs) / frameDeltaMs0).toInt).toSet
+  /** The native grid over the full period: the parquet reshape. */
+  private def buildFrame()(implicit spark: SparkSession): DataFrame = {
+    // world anchoring: cell (x, y) covers [x, x+1]×[gridH-y-1, gridH-y],
+    // pixel row 0 = top = world y gridH; negative ids fall off the grid
+    val timesMs = allTimes.map(_.toEpochMilli)
     val nd = noDataValue
-    val (rw, rh) = (req.width, req.height)
     val tileCells = udf { (entries: Seq[org.apache.spark.sql.Row], tw: Int, th: Int) =>
       val out = Array.fill(tw * th)(nd)
       entries.foreach { e => out(e.getInt(0)) = e.getDouble(1) }
       out
     }
-    val nTx = TileLayout.tilesX(rw)
-    val nTiles = TileLayout.numTiles(rw, rh)
+    val nTx = TileLayout.tilesX(gridW)
+    val nTiles = TileLayout.numTiles(gridW, gridH)
     // input-size-derived shuffle parallelism for the cell pivot
     graft.Tuning.autoConfigure(spark, path)
     val df = spark.read.parquet(path)
       .select(expr(idExpr).cast("long").as("id"),
         when(expr(noDataFilter), lit(nd)).otherwise(expr(valueExpr).cast("double")).as("v"))
+      .filter(col("id") >= 0)
       .withColumn("fi", (col("id") % frames).cast("int"))
-      .filter(col("fi").isin(wanted.toSeq: _*))
       .withColumn("cell", (col("id") / frames).cast("long"))
       .withColumn("y", (col("cell") / gridW).cast("int"))
       .withColumn("x", (col("cell") % gridW).cast("int"))
       .filter(col("y") < gridH)
-      // request-window pixel coordinates (row 0 = top = world y2)
-      .withColumn("px", col("x") - bx1)
-      .withColumn("py", col("y") - (gridH - by2))
-      .filter(col("px") >= 0 && col("px") < rw && col("py") >= 0 && col("py") < rh)
       .withColumn("t", col("fi").cast("long") * frameDeltaMs0 + timeFirstMs)
-      .withColumn("ty", floor(col("py") / TileLayout.TILE).cast("int"))
-      .withColumn("tx", floor(col("px") / TileLayout.TILE).cast("int"))
-      .withColumn("tw", least(lit(TileLayout.TILE), lit(rw) - col("tx") * TileLayout.TILE))
-      .withColumn("th", least(lit(TileLayout.TILE), lit(rh) - col("ty") * TileLayout.TILE))
+      .withColumn("ty", floor(col("y") / TileLayout.TILE).cast("int"))
+      .withColumn("tx", floor(col("x") / TileLayout.TILE).cast("int"))
+      .withColumn("tw", least(lit(TileLayout.TILE), lit(gridW) - col("tx") * TileLayout.TILE))
+      .withColumn("th", least(lit(TileLayout.TILE), lit(gridH) - col("ty") * TileLayout.TILE))
       .withColumn("pos",
-        (col("py") % TileLayout.TILE) * col("tw") + (col("px") % TileLayout.TILE))
+        (col("y") % TileLayout.TILE) * col("tw") + (col("x") % TileLayout.TILE))
       .groupBy(col("t"), col("ty"), col("tx"))
       .agg(tileCells(collect_list(struct(col("pos"), col("v"))),
         first(col("tw")), first(col("th"))).as("values"))
@@ -250,8 +241,8 @@ case class TableRasterSource(
     allTiles.join(df, Seq("t", "ty", "tx"), "left")
       .select(col("t"), col("ty"), col("tx"),
         coalesce(col("values"), {
-          val tw = least(lit(TileLayout.TILE), lit(rw) - col("tx") * TileLayout.TILE)
-          val th = least(lit(TileLayout.TILE), lit(rh) - col("ty") * TileLayout.TILE)
+          val tw = least(lit(TileLayout.TILE), lit(gridW) - col("tx") * TileLayout.TILE)
+          val th = least(lit(TileLayout.TILE), lit(gridH) - col("ty") * TileLayout.TILE)
           array_repeat(lit(nd), (tw * th).cast("int"))
         }).as("values"))
   }

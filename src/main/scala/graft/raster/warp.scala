@@ -4,62 +4,32 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared nearest-neighbour warp/resample stage, the distributed analogue of
-  * the reference's generic source warp (raster/sources.py:119-145): any
-  * store that can serve native-grid requests also serves requests in a
-  * different CRS or at a different resolution.
+  * the reference's generic source warp (raster/sources.py:119-145): a store
+  * that holds its native grid as a tile frame also serves requests in a
+  * different CRS, at a different resolution, over a sub-window, a haloed
+  * window hanging off the grid, or a single point.
   *
   * Plan shape (no driver materialization of pixel data):
-  *  1. the request footprint is transformed into the source CRS driver-side
-  *     (corners + edge midpoints, 1-cell safety margin) and becomes a
-  *     native-grid sub-window request;
-  *  2. a driver-computed (output tile → needed source tiles) relation is
-  *     broadcast-joined against the native tile frame — the same bounded
-  *     gather as the stencil halo exchange, so each source tile is copied at
-  *     most O(overlapping output tiles) times;
-  *  3. a per-output-tile kernel maps each output pixel center through the
-  *     exact projection transform and samples the gathered source tiles
+  *  1. a driver-computed (output tile → needed native tiles) relation is
+  *     broadcast-joined against the store's full native tile frame — the
+  *     same bounded gather as the stencil halo exchange, so each native
+  *     tile is copied at most O(overlapping output tiles) times and the
+  *     native frame is never rebuilt per request;
+  *  2. a per-output-tile kernel maps each output pixel center through the
+  *     exact projection transform and samples the gathered native tiles
   *     (GDAL NN warp semantics; exact per-pixel transform instead of GDAL's
   *     0.125 px approximator, like `MemorySource`).
   */
 object WarpStage {
 
-  /** Does `req` need the warp path for a store whose native grid is
-    * unit cells anchored at (0, 0)..(gridW, gridH) in `storeProj`? */
-  def needed(req: RasterRequest, storeProj: String): Boolean =
-    Proj.normalize(req.projection) != Proj.normalize(storeProj) ||
-      (!req.bbox.isPoint && (req.cellW != 1.0 || req.cellH != 1.0 ||
-        req.bbox.x1 != math.rint(req.bbox.x1) || req.bbox.y2 != math.rint(req.bbox.y2)))
-
-  /** Source-CRS envelope of the request footprint: corners + edge midpoints
-    * (projection edges curve between corners). */
-  private def sourceEnvelope(req: RasterRequest, storeProj: String): Bbox = {
-    val b = req.bbox
-    val xs = Seq(b.x1, (b.x1 + b.x2) / 2, b.x2)
-    val ys = Seq(b.y1, (b.y1 + b.y2) / 2, b.y2)
-    val pts = for (x <- xs; y <- ys) yield
-      Proj.transform(req.projection, storeProj, x, y)
-    Bbox(pts.map(_._1).min, pts.map(_._2).min, pts.map(_._1).max, pts.map(_._2).max)
-  }
-
-  /** Warp `req` against a native-grid builder. `gridW`/`gridH` bound the
-    * store's native extent; `timesMs` are the frame instants the request
-    * covers (plan metadata); `build` must serve integer-aligned unit-cell
-    * sub-window requests in `storeProj`. */
+  /** Warp `req` against `native`, the tile frame of a store whose native
+    * grid is `gridW`×`gridH` unit cells anchored at (0, 0) in `storeProj`
+    * (pixel row 0 at world y `gridH`). `timesMs` are the frame instants the
+    * request covers (plan metadata). */
   def frame(req: RasterRequest, storeProj: String, gridW: Int, gridH: Int,
-      noData: Double, timesMs: Seq[Long], build: RasterRequest => DataFrame)(
+      noData: Double, timesMs: Seq[Long], native: DataFrame)(
       implicit spark: SparkSession): DataFrame = {
-    // 1. native sub-window covering the request footprint (+1 cell margin)
-    val env = sourceEnvelope(req, storeProj)
-    val sx0 = math.max(0, math.floor(env.x1).toInt - 1)
-    val sy1 = math.max(0, math.floor(env.y1).toInt - 1)
-    val sx1 = math.min(gridW, math.ceil(env.x2).toInt + 1)
-    val sy2 = math.min(gridH, math.ceil(env.y2).toInt + 1)
-    val (sw, sh) = (math.max(sx1 - sx0, 1), math.max(sy2 - sy1, 1))
-    val sreq = req.copy(bbox = Bbox(sx0, sy1, sx0 + sw, sy1 + sh),
-      projection = storeProj, width = sw, height = sh)
-    val src = build(sreq)
-
-    // 2. output tile → needed source tiles (driver-side, tile counts only)
+    // 1. output tile → needed native tiles (driver-side, tile counts only)
     val tile = TileLayout.TILE
     val (srcProj, dstProj) = (storeProj, req.projection)
     val outPairs = for {
@@ -78,21 +48,22 @@ object WarpStage {
       } yield Proj.transform(dstProj, srcProj, x, y)
       val ex0 = pts.map(_._1).min - 1; val ex1 = pts.map(_._1).max + 1
       val ey0 = pts.map(_._2).min - 1; val ey1 = pts.map(_._2).max + 1
-      // source window pixel rows: row 0 = top = world y (sy1 + sh)
-      val pj0 = math.max(0, math.floor(ex0 - sx0).toInt / tile)
-      val pj1 = math.min(TileLayout.tilesX(sw) - 1, math.floor(ex1 - sx0).toInt / tile)
-      val pi0 = math.max(0, math.floor((sy1 + sh) - ey1).toInt / tile)
-      val pi1 = math.min(TileLayout.tilesY(sh) - 1, math.floor((sy1 + sh) - ey0).toInt / tile)
+      // native tiles overlapping the envelope; an envelope off the grid
+      // maps to none, and its output tile densifies to nodata below
+      def tileOf(px: Double) = Math.floorDiv(math.floor(px).toInt, tile)
+      val pj0 = math.max(0, tileOf(ex0))
+      val pj1 = math.min(TileLayout.tilesX(gridW) - 1, tileOf(ex1))
+      val pi0 = math.max(0, tileOf(gridH - ey1))
+      val pi1 = math.min(TileLayout.tilesY(gridH) - 1, tileOf(gridH - ey0))
       for (sty <- pi0 to pi1; stx <- pj0 to pj1)
         yield (oty, otx, sty, stx)
     }
     import spark.implicits._
     val mapDf = broadcast(mapping.toDF("oty", "otx", "ty", "tx"))
 
-    // 3. gather + per-tile NN sample kernel
+    // 2. gather + per-tile NN sample kernel
     val r = req
     val nd = noData
-    val (winX0, winYTop, winW, winH) = (sx0, sy1 + sh, sw, sh)
     val kernel = udf { (oty: Int, otx: Int, t: Long, tiles: Seq[Row]) =>
       val byTile = tiles.map(e => (e.getInt(0), e.getInt(1)) -> e.getSeq[Double](2)).toMap
       val tw = TileLayout.tileW(r.width, otx)
@@ -108,16 +79,16 @@ object WarpStage {
             if (srcProj == dstProj) (cxReq, cyReq)
             else Proj.transform(dstProj, srcProj, cxReq, cyReq)
           // beyond-domain transforms yield NaN; NaN.toInt is 0 and would
-          // alias to the window corner instead of reading as outside
+          // alias to the grid corner instead of reading as outside
           val v =
             if (java.lang.Double.isNaN(cx) || java.lang.Double.isNaN(cy)) nd
             else {
-              // window pixel coordinates (row 0 at world top)
-              val pj = math.floor(cx - winX0).toInt
-              val pi = math.floor(winYTop - cy).toInt
-              if (pi < 0 || pi >= winH || pj < 0 || pj >= winW) nd
+              // native pixel coordinates (row 0 at world top)
+              val pj = math.floor(cx).toInt
+              val pi = math.floor(gridH - cy).toInt
+              if (pi < 0 || pi >= gridH || pj < 0 || pj >= gridW) nd
               else {
-                val stw = TileLayout.tileW(winW, pj / tile)
+                val stw = TileLayout.tileW(gridW, pj / tile)
                 byTile.get((pi / tile, pj / tile)) match {
                   case Some(vals) => vals((pi % tile) * stw + (pj % tile))
                   case None       => nd
@@ -131,14 +102,17 @@ object WarpStage {
       }
       out
     }
-    val gathered = src.join(mapDf, Seq("ty", "tx"))
+    val gathered = native.join(mapDf, Seq("ty", "tx"))
       .groupBy(col("t"), col("oty"), col("otx"))
       .agg(collect_list(struct(col("ty"), col("tx"), col("values"))).as("tiles"))
       .select(col("t"), col("oty").as("ty"), col("otx").as("tx"),
         kernel(col("oty"), col("otx"), col("t"), col("tiles")).as("values"))
-    // densify: output tiles whose source footprint fell outside the clamped
-    // native window produced no mapping rows — they must still appear as
-    // nodata tiles (the frame() contract is times × numTiles rows)
+    // densify: output tiles whose source footprint fell outside the
+    // native grid produced no mapping rows — they must still appear as
+    // nodata tiles (the frame() contract is times × numTiles rows). When
+    // every output tile maps to a native tile, the gather already has them
+    // all (the native frame holds every frame of every tile).
+    if (mapping.map(m => (m._1, m._2)).distinct.size == outPairs.size) return gathered
     val nOtx = TileLayout.tilesX(req.width)
     val nOTiles = TileLayout.numTiles(req.width, req.height)
     val ts = timesMs.toIndexedSeq

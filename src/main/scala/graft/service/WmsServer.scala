@@ -4,6 +4,9 @@ import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 import java.net.{InetSocketAddress, URLDecoder}
 import java.time.Instant
+import java.time.format.DateTimeParseException
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 import graft.core.BlockRegistry
@@ -22,6 +25,11 @@ import graft.raster.{Bbox, Proj, RasterBlock, RasterRequest}
   * selects the color ramp (`gray` default, `viridis`, `terrain`).
   * `request=GetCapabilities` returns a WMS 1.3.0 capabilities document
   * describing the dynamic-view contract.
+  *
+  * Requests run on a fixed pool of `defaultParallelism` threads, so as
+  * many map windows evaluate at once as the session has cores; `stop()`
+  * shuts the pool down. A client fault (a bad or missing parameter, an
+  * unparsable time, a request guard) answers 400, any other failure 500.
   */
 object WmsMain {
   def main(args: Array[String]): Unit = {
@@ -76,6 +84,15 @@ object WmsServer {
       "width" -> "256", "height" -> "256", "projection" -> "EPSG:3857")
   }
 
+  /** HTTP status of a failed request: 400 for a client fault (`require`
+    * and `RequestGuards` raise `IllegalArgumentException`, a missing
+    * parameter `NoSuchElementException`), 500 for an engine fault. */
+  private[service] def statusOf(e: Exception): Int = e match {
+    case _: IllegalArgumentException | _: NoSuchElementException |
+        _: DateTimeParseException => 400
+    case _ => 500
+  }
+
   /** ARGB for normalized value `t` in [0, 1] under the named ramp. */
   def rampColor(name: String, t: Double): Int = {
     val stops = Ramps.getOrElse(name,
@@ -101,38 +118,42 @@ class WmsServer(spark: SparkSession, port: Int = 0,
 
   def boundPort: Int = server.getAddress.getPort
 
+  private val threads = new AtomicInteger
+  private val pool = Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism,
+    (r: Runnable) => {
+      val t = new Thread(r, s"graft-wms-$boundPort-${threads.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+  server.setExecutor(pool)
+
+  /** A handler answering `body`'s (content type, bytes) with 200, or the
+    * failure's message with [[WmsServer.statusOf]]. */
+  private def handler(body: HttpExchange => (String, Array[Byte])): HttpHandler = ex =>
+    try {
+      val (status, ctype, bytes) =
+        try { val (c, b) = body(ex); (200, c, b) }
+        catch { case e: Exception =>
+          (WmsServer.statusOf(e), "text/plain; charset=UTF-8",
+            s"error: ${e.getMessage}".getBytes("UTF-8"))
+        }
+      ex.getResponseHeaders.set("Content-Type", ctype)
+      ex.sendResponseHeaders(status, bytes.length)
+      ex.getResponseBody.write(bytes)
+    } finally ex.close()
+
+  private def query(ex: HttpExchange): Map[String, String] =
+    parseQuery(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
+
   def start(): WmsServer = {
-    server.createContext("/wms", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        try {
-          val params = parseQuery(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
-          if (params.get("request").exists(_.equalsIgnoreCase("GetCapabilities"))) {
-            val xml = capabilitiesXml.getBytes("UTF-8")
-            ex.getResponseHeaders.set("Content-Type", "text/xml; charset=UTF-8")
-            ex.sendResponseHeaders(200, xml.length)
-            ex.getResponseBody.write(xml)
-          } else if (params.get("request").exists(_.equalsIgnoreCase("GetFeatureInfo"))) {
-            val (ctype, body) = featureInfo(params)
-            ex.getResponseHeaders.set("Content-Type", ctype)
-            ex.sendResponseHeaders(200, body.length)
-            ex.getResponseBody.write(body)
-          } else if (params.get("request").exists(_.equalsIgnoreCase("GetLegendGraphic"))) {
-            val png = legendGraphic(params)
-            ex.getResponseHeaders.set("Content-Type", "image/png")
-            ex.sendResponseHeaders(200, png.length)
-            ex.getResponseBody.write(png)
-          } else {
-            val png = render(params)
-            ex.getResponseHeaders.set("Content-Type", "image/png")
-            ex.sendResponseHeaders(200, png.length)
-            ex.getResponseBody.write(png)
-          }
-        } catch {
-          case e: Exception =>
-            val msg = s"error: ${e.getMessage}".getBytes("UTF-8")
-            ex.sendResponseHeaders(400, msg.length)
-            ex.getResponseBody.write(msg)
-        } finally ex.close()
+    server.createContext("/wms", handler { ex =>
+      val params = query(ex)
+      params.get("request").map(_.toLowerCase(java.util.Locale.ROOT)) match {
+        case Some("getcapabilities") =>
+          ("text/xml; charset=UTF-8", capabilitiesXml.getBytes("UTF-8"))
+        case Some("getfeatureinfo") => featureInfo(params)
+        case Some("getlegendgraphic") => ("image/png", legendGraphic(params))
+        case _ => ("image/png", render(params))
       }
     })
     // XYZ/slippy-map tile endpoint (the de-facto WMTS of web maps, the
@@ -140,61 +161,28 @@ class WmsServer(spark: SparkSession, port: Int = 0,
     // EPSG:3857, query params (layers=<view json>, styles, vmin/vmax,
     // time) as in GetMap. Same render path — a tile IS a GetMap with the
     // tile's mercator bbox, so caching/clients compose freely.
-    server.createContext("/tiles", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        try {
-          val q = parseQuery(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
-          if (ex.getRequestURI.getPath.stripSuffix("/") == "/tiles") {
-            // TileJSON 2.2 descriptor (the public spec web clients use to
-            // wire an XYZ layer): echoes the tile URL template with the
-            // caller's query string
-            val qs = Option(ex.getRequestURI.getRawQuery)
-              .filter(_.nonEmpty).map("?" + _).getOrElse("")
-            val doc = graft.core.Json.render(
-              scala.collection.immutable.ListMap(
-                "tilejson" -> "2.2.0",
-                "tiles" -> Seq(s"http://127.0.0.1:$boundPort" +
-                  s"/tiles/{z}/{x}/{y}.png$qs"),
-                "minzoom" -> 0L, "maxzoom" -> 30L)).getBytes("UTF-8")
-            ex.getResponseHeaders.set("Content-Type", "application/json")
-            ex.sendResponseHeaders(200, doc.length)
-            ex.getResponseBody.write(doc)
-            return
-          }
-          val png = render(q ++ WmsServer.tileParams(
-            ex.getRequestURI.getPath))
-          ex.getResponseHeaders.set("Content-Type", "image/png")
-          ex.sendResponseHeaders(200, png.length)
-          ex.getResponseBody.write(png)
-        } catch {
-          case e: Exception =>
-            val msg = s"error: ${e.getMessage}".getBytes("UTF-8")
-            ex.sendResponseHeaders(400, msg.length)
-            ex.getResponseBody.write(msg)
-        } finally ex.close()
-      }
+    server.createContext("/tiles", handler { ex =>
+      if (ex.getRequestURI.getPath.stripSuffix("/") == "/tiles") {
+        // TileJSON 2.2 descriptor (the public spec web clients use to
+        // wire an XYZ layer): echoes the tile URL template with the
+        // caller's query string
+        val qs = Option(ex.getRequestURI.getRawQuery)
+          .filter(_.nonEmpty).map("?" + _).getOrElse("")
+        ("application/json", graft.core.Json.render(
+          scala.collection.immutable.ListMap(
+            "tilejson" -> "2.2.0",
+            "tiles" -> Seq(s"http://127.0.0.1:$boundPort" +
+              s"/tiles/{z}/{x}/{y}.png$qs"),
+            "minzoom" -> 0L, "maxzoom" -> 30L)).getBytes("UTF-8"))
+      } else ("image/png", render(query(ex) ++ WmsServer.tileParams(ex.getRequestURI.getPath)))
     })
     // vector tiles: /features/{z}/{x}/{y}.json returns the features of a
     // serialized GEOMETRY view intersecting the tile, as an RFC 7946
     // FeatureCollection in EPSG:4326 — the layer a leaflet L.geoJSON
     // client consumes directly
-    server.createContext("/features", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        try {
-          val q = parseQuery(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
-          val body = featureTile(q ++ WmsServer.tileParams(
-            ex.getRequestURI.getPath, "features"))
-          ex.getResponseHeaders.set("Content-Type",
-            "application/geo+json; charset=UTF-8")
-          ex.sendResponseHeaders(200, body.length)
-          ex.getResponseBody.write(body)
-        } catch {
-          case e: Exception =>
-            val msg = s"error: ${e.getMessage}".getBytes("UTF-8")
-            ex.sendResponseHeaders(400, msg.length)
-            ex.getResponseBody.write(msg)
-        } finally ex.close()
-      }
+    server.createContext("/features", handler { ex =>
+      ("application/geo+json; charset=UTF-8", featureTile(query(ex) ++
+        WmsServer.tileParams(ex.getRequestURI.getPath, "features")))
     })
     server.start()
     this
@@ -204,7 +192,7 @@ class WmsServer(spark: SparkSession, port: Int = 0,
     val view = BlockRegistry.fromJson(params("layers"))
       .asInstanceOf[graft.geometry.GeometryBlock]
     validateSourcePaths(view)
-    val Array(x1, y1, x2, y2) = params("bbox").split(",").map(_.toDouble)
+    val Array(x1, y1, x2, y2) = bboxParam(params)
     val vp = view.projection
     // corner-transform the mercator tile into the view's CRS (axis-aligned
     // envelope of the corners — the standard tile-request approximation)
@@ -224,7 +212,18 @@ class WmsServer(spark: SparkSession, port: Int = 0,
     } finally java.nio.file.Files.deleteIfExists(tmp)
   }
 
-  def stop(): Unit = server.stop(0)
+  /** Stops listening, lets in-flight requests finish and ends the pool. */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    if (!pool.awaitTermination(30, TimeUnit.SECONDS)) pool.shutdownNow()
+  }
+
+  private def bboxParam(params: Map[String, String]): Array[Double] = {
+    val b = params("bbox").split(",").map(_.toDouble)
+    require(b.length == 4, s"bbox needs 4 numbers, got ${b.length}")
+    b
+  }
 
   private def parseQuery(q: String): Map[String, String] =
     q.split("&").filter(_.contains("=")).map { kv =>
@@ -333,7 +332,7 @@ class WmsServer(spark: SparkSession, port: Int = 0,
     val viewJson = params.getOrElse("query_layers", params("layers"))
     val view = BlockRegistry.fromJson(viewJson).asInstanceOf[RasterBlock]
     validateSourcePaths(view)
-    val Array(x1, y1, x2, y2) = params("bbox").split(",").map(_.toDouble)
+    val Array(x1, y1, x2, y2) = bboxParam(params)
     val w = params.getOrElse("width", "256").toInt
     val h = params.getOrElse("height", "256").toInt
     val i = params.get("i").orElse(params.get("x")).map(_.toInt)
@@ -395,7 +394,7 @@ class WmsServer(spark: SparkSession, port: Int = 0,
   private[service] def render(params: Map[String, String]): Array[Byte] = {
     val view = BlockRegistry.fromJson(params("layers")).asInstanceOf[RasterBlock]
     validateSourcePaths(view)
-    val Array(x1, y1, x2, y2) = params("bbox").split(",").map(_.toDouble)
+    val Array(x1, y1, x2, y2) = bboxParam(params)
     val w = params.getOrElse("width", "256").toInt
     val h = params.getOrElse("height", "256").toInt
     val proj = params.get("projection").orElse(params.get("crs"))

@@ -203,25 +203,35 @@ class PlanSpec extends SparkSpec {
     // pre-aggregate's only consumer was the scoring join, and it bought
     // a corpus-sized multi-column exchange for a within-doc
     // duplicate-rate compression. The pinned invariants are now:
-    //   - the MODEL side of the scoring join is an aggregate (never a
-    //     positions-vs-positions join),
+    //   - the MODEL side of the scoring join is an aggregate, or the
+    //     local checkpoint of one (the n-gram count table is
+    //     checkpointed before its windows), and never a join
+    //     (positions-vs-positions),
     //   - the PROBE side is the raw instance stream (a reappearing
     //     pre-aggregate = the removed corpus exchange sneaking back),
     //   - nothing goes cartesian (the 1-row totals broadcast is a BNLJ
     //     by design).
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
-    for (q <- Seq("p33_bigram_perplexity", "p38_trigram_perplexity")) {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    import org.apache.spark.sql.execution.LogicalRDD
+    def aggregated(p: LogicalPlan) =
+      p.collect { case a: Aggregate => a; case r: LogicalRDD => r }.nonEmpty
+    for ((q, keys) <- Seq("p33_bigram_perplexity" -> Set("w1", "w2"),
+        "p38_trigram_perplexity" -> Set("w1", "w2", "w3"))) {
       val qe = SparkEntry.queries(q)(spark, dir).queryExecution
-      val joins = qe.optimizedPlan.collect { case j: Join => j }
-      assert(joins.nonEmpty, q)
-      val scoring = joins.head
-      val rightIsModel =
-        scoring.right.collect { case a: Aggregate => a }.nonEmpty
-      val modelSide = if (rightIsModel) scoring.right else scoring.left
-      val probeSide = if (rightIsModel) scoring.left else scoring.right
-      assert(modelSide.collect { case a: Aggregate => a }.nonEmpty,
+      // the scoring join is the one on the n-gram keys, wherever the
+      // optimizer's collect order puts it
+      val scoring = qe.optimizedPlan.collect {
+        case j: Join if j.condition.exists(_.references.map(_.name).toSet == keys) => j
+      } match {
+        case Seq(j) => j
+        case js => fail(s"$q: ${js.size} joins on the n-gram keys $keys, want 1")
+      }
+      val (modelSide, probeSide) =
+        if (aggregated(scoring.right)) (scoring.right, scoring.left)
+        else (scoring.left, scoring.right)
+      assert(aggregated(modelSide) && modelSide.collect { case j: Join => j }.isEmpty,
         s"$q: scoring join must take an aggregated model table")
-      assert(probeSide.collect { case a: Aggregate => a }.isEmpty,
+      assert(!aggregated(probeSide),
         s"$q: probe side must stay the instance stream (no per-doc " +
           "pre-aggregate exchange)")
       assert(!plan(q).contains("CartesianProduct"), q)

@@ -183,4 +183,52 @@ class WarpSpec extends SparkSpec {
       stop = Some(Instant.ofEpochMilli(T0 + Hour))))
     assert(FrameCache.missCount.get() == m1, "second native sub-range rebuilt the reshape")
   }
+
+  /** `b` over `req`, and the FrameCache misses the request added. */
+  private def served(b: RasterBlock, req: RasterRequest): (RasterResult, Long) = {
+    val m0 = FrameCache.missCount.get()
+    val res = b.getData(req).get
+    (res, FrameCache.missCount.get() - m0)
+  }
+
+  /** Each frame of `got` equals the `got.width`×`got.height` window of
+    * `full` whose top-left pixel is (row0, col0), nodata off the grid. */
+  private def assertCrop(got: RasterResult, full: RasterResult, row0: Int, col0: Int): Unit = {
+    assert(got.times == full.times)
+    def norm(v: Double, nd: Double) = if (v == nd) Double.NaN else v
+    for (t <- full.times.indices; i <- 0 until got.height; j <- 0 until got.width) {
+      val (r, c) = (row0 + i, col0 + j)
+      val want =
+        if (r < 0 || r >= full.height || c < 0 || c >= full.width) Double.NaN
+        else norm(full.values(t)(r * full.width + c), full.noDataValue)
+      val v = norm(got.values(t)(i * got.width + j), got.noDataValue)
+      assert(v.equals(want), s"frame $t pixel ($i, $j): $v vs $want")
+    }
+  }
+
+  test("a new window gathers from the cached native frame: one miss, a crop of the grid") {
+    FrameCache.clear()
+    def req(b: Bbox, w: Int, h: Int) = RasterRequest(b, "EPSG:28992", w, h,
+      Some(Instant.ofEpochMilli(T0)), Some(Instant.ofEpochMilli(T0 + Hour)))
+    val (full, mFull) = served(table, req(Bbox(0, 0, gw, gh), gw, gh))
+    assert(mFull == 1, "the native frame is one entry")
+    // a window hanging off the top-right grid corner: nodata outside
+    val h0 = FrameCache.hitCount.get()
+    val (off, mOff) = served(table, req(Bbox(7, 3, 13, 9), 6, 6))
+    assert(mOff == 1, "only the window itself may miss")
+    assert(FrameCache.hitCount.get() > h0, "the native frame must be a hit")
+    assertCrop(off, full, gh - 9, 7)
+    // a point on the corner of four cells takes the cell below-right of it
+    // (floor of its native pixel coordinates, as MemorySource)
+    val (pt, mPt) = served(table, req(Bbox(4, 2, 4, 2), 1, 1))
+    assert(mPt == 1)
+    assertCrop(pt, full, gh - 2, 4)
+    // a HillShade window at the bottom-left grid corner: its halo hangs
+    // off the grid, as that of the full-grid render does
+    val shade = HillShade(table)
+    val (shadeFull, _) = served(shade, req(Bbox(0, 0, gw, gh), gw, gh))
+    val (corner, mCorner) = served(shade, req(Bbox(0, 0, 4, 3), 4, 3))
+    assert(mCorner == 1)
+    assertCrop(corner, shadeFull, gh - 3, 0)
+  }
 }

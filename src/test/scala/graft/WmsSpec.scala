@@ -7,6 +7,27 @@ import RasterFixtures._
 
 class WmsSpec extends SparkSpec {
 
+  /** A `frames`-frame table raster of `gw`×`gh` cells in a fresh directory
+    * under the JVM temp dir (a default data root); cell value
+    * `t * 1000 + y * gw + x`. */
+  private def tableRaster(gw: Int, gh: Int, frames: Int, valueExpr: String = "value") = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wms_tbl").toString
+    import spark.implicits._
+    (for (y <- 0 until gh; x <- 0 until gw; t <- 0 until frames)
+      yield ((y.toLong * gw + x) * frames + t, t * 1000.0 + y * gw + x))
+      .toDF("event_id", "value").write.parquet(s"$dir/events.parquet")
+    TableRasterSource(s"$dir/events.parquet", "event_id", valueExpr, frames, gw, gh)
+  }
+
+  private def get(url: String): (Int, Array[Byte]) = {
+    val c = new URL(url).openConnection().asInstanceOf[HttpURLConnection]
+    try {
+      val status = c.getResponseCode
+      val in = if (status == 200) c.getInputStream else c.getErrorStream
+      (status, try in.readAllBytes() finally in.close())
+    } finally c.disconnect()
+  }
+
   test("the WMS endpoint renders a serialized view as PNG over HTTP") {
     val server = new WmsServer(spark).start()
     try {
@@ -267,6 +288,53 @@ class WmsSpec extends SparkSpec {
       assert(doc.contains("\"FeatureCollection\""))
       // reprojected to 4326: Amersfoort-ish lon/lat appear in the coords
       assert(doc.contains("\"type\": \"Feature\"") && doc.contains("5.09"))
+    } finally server.stop()
+  }
+
+  test("concurrent GetMaps on the request pool match the same requests served alone") {
+    val view = tableRaster(40, 30, 2)
+    val layers = URLEncoder.encode(view.toJson, "UTF-8")
+    val server = new WmsServer(spark).start()
+    val prefix = s"graft-wms-${server.boundPort}-"
+    def poolThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(_.getName.startsWith(prefix))
+    // 8 distinct 8x8 windows, frame 1 of 2
+    val urls = for (k <- 0 until 8) yield {
+      val (x, y) = (4 * k, (3 * k) % 22)
+      s"http://127.0.0.1:${server.boundPort}/wms?layers=$layers" +
+        s"&bbox=$x,$y,${x + 8},${y + 8}&width=8&height=8&projection=EPSG:28992" +
+        "&time=1970-01-01T01:00:00Z&vmin=0&vmax=2200&styles=viridis"
+    }
+    val threads = try {
+      FrameCache.clear()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(urls.size)
+      val together = try urls.map(u => pool.submit(() => get(u))).map(_.get())
+        finally pool.shutdown()
+      val threads = poolThreads
+      assert(threads.nonEmpty, "requests ran off the server's pool")
+      FrameCache.clear()
+      val alone = urls.map(get)
+      for (((s1, b1), (s2, b2)) <- together.zip(alone)) {
+        assert(s1 == 200 && s2 == 200, new String(b1, "UTF-8"))
+        assert(b1.sameElements(b2), "a concurrent tile differs from the same tile alone")
+      }
+      // the tiles differ from one another: each saw its own window
+      assert(alone.map(_._2.toSeq).distinct.size == urls.size)
+      threads
+    } finally server.stop()
+    threads.foreach(_.join(10000))
+    assert(threads.forall(!_.isAlive) && poolThreads.isEmpty, "pool threads outlive stop()")
+  }
+
+  test("an engine fault answers 500, not a client 400") {
+    val view = tableRaster(4, 4, 1, "raise_error('boom')")
+    val layers = URLEncoder.encode(view.toJson, "UTF-8")
+    val server = new WmsServer(spark).start()
+    try {
+      val (status, body) = get(s"http://127.0.0.1:${server.boundPort}/wms?layers=$layers" +
+        "&bbox=0,0,4,4&width=4&height=4&projection=EPSG:28992&time=1970-01-01T00:00:00Z")
+      assert(status == 500, new String(body, "UTF-8"))
+      assert(new String(body, "UTF-8").contains("boom"))
     } finally server.stop()
   }
 }
