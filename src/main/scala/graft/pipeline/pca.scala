@@ -163,7 +163,7 @@ object Pca {
       outCol: String = "pca"): DataFrame = {
     val spark = df.sparkSession
     val bc = spark.sparkContext.broadcast(model)
-    val proj = udf { (x: Seq[Float]) =>
+    val proj = udf { (x: Array[Float]) =>
       val m = bc.value
       val out = new Array[Double](m.k)
       var j = 0

@@ -177,7 +177,7 @@ object Pq {
       .select(col(idCol).as("query_id"), vecD.as("qv"))
       .withColumn("lut", lutUdf(col("qv")))
     val kk = model.k
-    val adcUdf = udf { (codes: Array[Byte], lut: Seq[Double]) =>
+    val adcUdf = udf { (codes: Array[Byte], lut: Array[Double]) =>
       var s = 0.0; var sub = 0
       while (sub < codes.length) {
         s += lut(sub * kk + (codes(sub) & 0xFF))
@@ -230,7 +230,7 @@ object IvfPq {
     val centroids = Ivf.fit(df, idCol, vecCol, numClusters, iters)
     val bcCent = spark.sparkContext.broadcast(centroids)
     val assignUdf = udf(Ivf.nearest(centroids) _)
-    val residUdf = udf { (v: Seq[Double], cl: Int) =>
+    val residUdf = udf { (v: Array[Double], cl: Int) =>
       val cc = bcCent.value(cl)
       Array.tabulate(v.length)(i => v(i) - cc(i))
     }
@@ -254,7 +254,7 @@ object IvfPq {
     }
     // per-(query, probed list) LUT over the query's residual to THAT
     // list's centroid
-    val lutUdf = udf { (qv: Seq[Double], cl: Int) =>
+    val lutUdf = udf { (qv: Array[Double], cl: Int) =>
       val cc = bcCent.value(cl)
       val arr = Array.tabulate(qv.length)(i => qv(i) - cc(i))
       val lut = new Array[Double](model.m * model.k)
@@ -275,7 +275,7 @@ object IvfPq {
       .withColumn("cluster", explode(probesUdf(col("qv"))))
       .withColumn("lut", lutUdf(col("qv"), col("cluster")))
     val kk = model.k
-    val adcUdf = udf { (codes: Array[Byte], lut: Seq[Double]) =>
+    val adcUdf = udf { (codes: Array[Byte], lut: Array[Double]) =>
       var s = 0.0; var sub = 0
       while (sub < codes.length) {
         s += lut(sub * kk + (codes(sub) & 0xFF))

@@ -27,7 +27,7 @@ object Similarity {
     * interpreted and slower). */
   def hyperplaneSignature(vec: Column, planes: Seq[Array[Double]]): Column = {
     val ps = planes.toArray
-    val f = udf { (v: Seq[Double]) =>
+    val f = udf { (v: Array[Double]) =>
       var sig = 0L
       var i = 0
       while (i < ps.length) {

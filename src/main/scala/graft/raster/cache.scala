@@ -10,6 +10,11 @@ import graft.core.Block
   * per session and reused by every query over the same source+request —
   * the Spark-native analogue of the reference's `cached` dask graphs.
   *
+  * Entries are of two kinds: a table raster's native frame, and the
+  * shuffle gathers of `WarpStage` windows that span native tiles. Map-only
+  * windows (a map tile, a point) are narrow plans over the native frame
+  * and add no entry.
+  *
   * Bounded LRU (default 32 frames); evicted entries are unpersisted.
   * Scoped per SparkSession so frames never leak across sessions. Disable
   * with `spark.graft.frameCache=false`; size with

@@ -141,8 +141,12 @@ object MemorySource {
   * The reshape runs once per session: the native grid over the full period
   * is one `FrameCache` entry. Every other request — an aligned sub-window,
   * a point, a stencil's haloed window off the grid edge, an off-grid,
-  * resampled or cross-CRS window — is a `WarpStage` gather from that
-  * native frame, cached under its own full-period window key.
+  * resampled or cross-CRS window — is a `WarpStage` plan over that native
+  * frame. A map-only window (every output tile inside one native tile: a
+  * map tile, a point) gets no cache entry of its own: it is a narrow plan
+  * that samples only the requested frames. A gather (a window spanning
+  * native tiles) is cached under its own full-period window key, so its
+  * time sub-ranges share one shuffle.
   */
 case class TableRasterSource(
     path: String,
@@ -171,26 +175,28 @@ case class TableRasterSource(
   override def cellSize: Option[Double] = Some(1.0)
 
   override def frame(req: RasterRequest)(implicit spark: SparkSession): DataFrame = {
-    // memoize ONE full-period frame per spatial window (SURVEY §4
-    // token-keyed cache) and serve time sub-ranges by filtering it, so
-    // Snap/Shift/Resample sub-requests over the same window share it (the
-    // reference re-warps per request, raster/sources.py:119-145); a window
-    // other than the native grid gathers from the cached native frame
+    // memoize ONE full-period native frame (SURVEY §4 token-keyed cache)
+    // and serve time sub-ranges by filtering it, so Snap/Shift/Resample
+    // sub-requests share it (the reference re-warps per request,
+    // raster/sources.py:119-145); any other window warps from it
     val wanted = timesIn(req.start, req.stop).map(_.toEpochMilli)
+    def inTime(df: DataFrame) =
+      if (wanted.size == frames) df else df.filter(col("t").isin(wanted: _*))
     val (p0, p1) = period.get
     val native = RasterRequest(extent.get, projection, gridW, gridH, Some(p0), Some(p1))
     def nativeFrame = FrameCache.cached(this, native)(buildFrame())
     val isNative = Proj.normalize(req.projection) == Proj.normalize(projection) &&
       req.bbox == native.bbox && req.width == gridW && req.height == gridH
+    if (isNative) return inTime(nativeFrame)
     val window = req.copy(start = Some(p0), stop = Some(p1))
-    val whole =
-      if (isNative) nativeFrame
-      else FrameCache.cached(this, window) {
-        WarpStage.frame(window, projection, gridW, gridH, noDataValue,
-          allTimes.map(_.toEpochMilli), nativeFrame)
-      }
-    if (wanted.size == frames) whole
-    else whole.filter(col("t").isin(wanted: _*))
+    val warp = WarpStage.plan(window, projection, gridW, gridH)
+    val timesMs = allTimes.map(_.toEpochMilli)
+    // a map-only window is a narrow plan over the native frame that samples
+    // only the wanted frames: nothing to persist
+    if (warp.mapOnly) WarpStage.frame(warp, noDataValue, timesMs, inTime(nativeFrame))
+    else inTime(FrameCache.cached(this, window) {
+      WarpStage.frame(warp, noDataValue, timesMs, nativeFrame)
+    })
   }
 
   /** The native grid over the full period: the parquet reshape. */

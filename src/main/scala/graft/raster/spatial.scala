@@ -12,7 +12,11 @@ import org.apache.spark.sql.Column
   * the expanded grid, every expanded tile is shipped to each output tile
   * whose padded patch overlaps it (≤9 targets for margins ≤ tile size), and
   * a per-tile Scala kernel runs on the assembled patch — one shuffle keyed
-  * by output tile, no driver involvement.
+  * by output tile, no driver involvement. When the expanded request fits
+  * one tile (a map tile plus its margin), that tile holds the whole patch
+  * of the one output tile: the same patch assembly and kernel map it
+  * through with no exchange, as the reference grows, filters and crops in
+  * one process.
   */
 trait SpatialStencil extends BaseSingleRaster {
 
@@ -74,10 +78,45 @@ trait SpatialStencil extends BaseSingleRaster {
     val self = this
     val r = req
 
+    // output tile (oty, otx) of frame t from the expanded tiles (sty, stx,
+    // values) its padded patch overlaps; patch (0,0) sits at expanded pixel
+    // (otx*TILE + mx - hx, oty*TILE + my - hy), nodata off the expanded grid
+    def outTile(t: Long, oty: Int, otx: Int,
+        tiles: Iterator[(Int, Int, Array[Double])]): TileRow = {
+      val otw = math.min(TILE, ow - otx * TILE)
+      val oth = math.min(TILE, oh - oty * TILE)
+      val pw = otw + 2 * hx; val ph = oth + 2 * hy
+      val patch = Array.fill(pw * ph)(nd)
+      val px0 = otx * TILE + mx - hx; val py0 = oty * TILE + my - hy
+      tiles.foreach { case (sty, stx, vals) =>
+        val ex0 = stx * TILE; val ey0 = sty * TILE
+        val etw = math.min(TILE, ew - ex0); val eth = math.min(TILE, eh - ey0)
+        val x0 = math.max(ex0, px0); val x1 = math.min(ex0 + etw, px0 + pw)
+        val y0 = math.max(ey0, py0); val y1 = math.min(ey0 + eth, py0 + ph)
+        var y = y0
+        while (y < y1) {
+          var x = x0
+          while (x < x1) {
+            patch((y - py0) * pw + (x - px0)) = vals((y - ey0) * etw + (x - ex0))
+            x += 1
+          }
+          y += 1
+        }
+      }
+      TileRow(t, oty, otx, self.kernel(patch, otw, oth, hx, hy, nd, r))
+    }
+
+    val expanded = store.frame(ereq).as[TileRow]
+    // the expanded request fits one tile: that tile holds the whole patch
+    // of the one output tile, so each frame maps through with no exchange
+    if (ew <= TILE && eh <= TILE)
+      return expanded.map(row => outTile(row.t, 0, 0, Iterator((row.ty, row.tx, row.values))))
+        .toDF("t", "ty", "tx", "values")
+
     // expanded tile (sty, stx) → all output tiles whose padded patch
     // [otx*TILE + mx - hx, otx*TILE + mx + otw + hx) × [...] overlaps it
     // (expanded-grid coordinates; patch pixel 0 = output pixel -hx)
-    val pairs = store.frame(ereq).as[TileRow].flatMap { row =>
+    val pairs = expanded.flatMap { row =>
       val ex0 = row.tx * TILE; val ey0 = row.ty * TILE
       val etw = math.min(TILE, ew - ex0); val eth = math.min(TILE, eh - ey0)
       for {
@@ -97,28 +136,7 @@ trait SpatialStencil extends BaseSingleRaster {
       .groupByKey { case (t, oty, otx, _, _, _) => (t, oty, otx) }
       .mapGroups { (key: (Long, Int, Int), it: Iterator[(Long, Int, Int, Int, Int, Array[Double])]) =>
         val (t, oty, otx) = key
-        val otw = math.min(TILE, ow - otx * TILE)
-        val oth = math.min(TILE, oh - oty * TILE)
-        val pw = otw + 2 * hx; val ph = oth + 2 * hy
-        val patch = Array.fill(pw * ph)(nd)
-        // patch (0,0) sits at expanded pixel (otx*TILE + mx - hx, ...)
-        val px0 = otx * TILE + mx - hx; val py0 = oty * TILE + my - hy
-        it.foreach { case (_, _, _, sty, stx, vals) =>
-          val ex0 = stx * TILE; val ey0 = sty * TILE
-          val etw = math.min(TILE, ew - ex0); val eth = math.min(TILE, eh - ey0)
-          val x0 = math.max(ex0, px0); val x1 = math.min(ex0 + etw, px0 + pw)
-          val y0 = math.max(ey0, py0); val y1 = math.min(ey0 + eth, py0 + ph)
-          var y = y0
-          while (y < y1) {
-            var x = x0
-            while (x < x1) {
-              patch((y - py0) * pw + (x - px0)) = vals((y - ey0) * etw + (x - ex0))
-              x += 1
-            }
-            y += 1
-          }
-        }
-        TileRow(t, oty, otx, self.kernel(patch, otw, oth, hx, hy, nd, r))
+        outTile(t, oty, otx, it.map { case (_, _, _, sty, stx, vals) => (sty, stx, vals) })
       }
       .toDF("t", "ty", "tx", "values")
   }

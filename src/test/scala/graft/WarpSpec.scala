@@ -14,45 +14,44 @@ class WarpSpec extends SparkSpec {
   private val Hour = 3600000L
 
   // deterministic content, nodata at one cell per frame
-  private def value(t: Int, y: Int, x: Int): Double = t * 100.0 + y * 10.0 + x
+  private def value(t: Int, y: Int, x: Int): Double = t * 100000.0 + y * 1000.0 + x
 
-  private lazy val tableDir: String = {
+  /** A `w`×`h` table raster with cell (2, 3) nodata in every frame, and the
+    * `MemorySource` golden of the same grid, that cell masked. */
+  private final class Fixture(val table: TableRasterSource, val golden: MemorySource)
+
+  private def fixture(w: Int, h: Int): Fixture = {
     val dir = Files.createTempDirectory("graft_warp_tbl").toString
     import spark.implicits._
-    val rows = for (y <- 0 until gh; x <- 0 until gw; t <- 0 until frames) yield {
-      val id = (y.toLong * gw + x) * frames + t
+    val rows = for (y <- 0 until h; x <- 0 until w; t <- 0 until frames) yield {
+      val id = (y.toLong * w + x) * frames + t
       (id, value(t, y, x), if (x == 3 && y == 2) "error" else "ok")
     }
     rows.toDF("event_id", "value", "event_type")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    s"$dir/events.parquet"
-  }
-
-  private lazy val table = TableRasterSource(tableDir, "event_id", "value",
-    frames, gw, gh, "event_type = 'error'", T0, Hour)
-
-  private lazy val memory = MemorySource(
-    data = (0 until frames).map(t =>
-      Array.tabulate(gw * gh)(i => value(t, i / gw, i % gw))),
-    gridW = gw, gridH = gh,
-    noDataIn = value(0, 2, 3), // not used: mask via data below
-    projection = "EPSG:28992", pixelSize = 1.0,
-    originX = 0.0, originY = gh.toDouble,
-    timeFirstMs = T0, frameDeltaMs = Some(Hour), dtypeName = "float64")
-
-  // MemorySource golden with the same nodata cell masked per frame
-  private lazy val golden = {
+    val table = TableRasterSource(s"$dir/events.parquet", "event_id", "value",
+      frames, w, h, "event_type = 'error'", T0, Hour)
     val masked = (0 until frames).map { t =>
-      val a = Array.tabulate(gw * gh)(i => value(t, i / gw, i % gw))
-      a(2 * gw + 3) = -1.0
+      val a = Array.tabulate(w * h)(i => value(t, i / w, i % w))
+      a(2 * w + 3) = -1.0
       a
     }
-    memory.copy(data = masked, noDataIn = -1.0)
+    val golden = MemorySource(
+      data = masked, gridW = w, gridH = h, noDataIn = -1.0,
+      projection = "EPSG:28992", pixelSize = 1.0,
+      originX = 0.0, originY = h.toDouble,
+      timeFirstMs = T0, frameDeltaMs = Some(Hour), dtypeName = "float64")
+    new Fixture(table, golden)
   }
 
-  private def compare(req: RasterRequest): Unit = {
-    val got = table.getData(req).get
-    val want = golden.getData(req).get
+  private lazy val small = fixture(gw, gh)
+  private lazy val table = small.table
+  // two native tiles across: 256 + 44 columns
+  private lazy val wide = fixture(300, 4)
+
+  private def compare(req: RasterRequest, f: Fixture = small): Unit = {
+    val got = f.table.getData(req).get
+    val want = f.golden.getData(req).get
     assert(got.times == want.times)
     got.values.zip(want.values).zipWithIndex.foreach { case ((g, w), t) =>
       val gn = g.map(v => if (v == got.noDataValue) Double.NaN else v)
@@ -163,15 +162,16 @@ class WarpSpec extends SparkSpec {
 
   test("overlapping warped time sub-ranges reuse one cached gather") {
     FrameCache.clear()
-    // off-grid window → warp path; two single-frame requests over the SAME
-    // spatial window must share one full-period warp build (window
-    // containment in time): the second is a pure cache hit, no new gather
-    val base = RasterRequest(Bbox(2, 1, 7, 4), "EPSG:28992", 10, 6,
+    // a window across the two native tiles of the wide grid → the gather;
+    // two single-frame requests over the SAME spatial window must share
+    // one full-period gather (window containment in time): the second is a
+    // pure cache hit, no new gather
+    val base = RasterRequest(Bbox(250, 1, 262, 3), "EPSG:28992", 12, 2,
       Some(Instant.ofEpochMilli(T0)), Some(Instant.ofEpochMilli(T0)))
-    compare(base)
+    compare(base, wide)
     val (h0, m0) = (FrameCache.hitCount.get(), FrameCache.missCount.get())
     compare(base.copy(start = Some(Instant.ofEpochMilli(T0 + Hour)),
-      stop = Some(Instant.ofEpochMilli(T0 + Hour))))
+      stop = Some(Instant.ofEpochMilli(T0 + Hour))), wide)
     assert(FrameCache.missCount.get() == m0, "second sub-range rebuilt the warp gather")
     assert(FrameCache.hitCount.get() > h0)
     // native-path sub-ranges share the same containment behavior
@@ -184,11 +184,12 @@ class WarpSpec extends SparkSpec {
     assert(FrameCache.missCount.get() == m1, "second native sub-range rebuilt the reshape")
   }
 
-  /** `b` over `req`, and the FrameCache misses the request added. */
-  private def served(b: RasterBlock, req: RasterRequest): (RasterResult, Long) = {
+  /** `b` over `req`, the FrameCache misses the request added, the Spark
+    * jobs it started and the shuffle bytes they wrote. */
+  private def served(b: RasterBlock, req: RasterRequest): (RasterResult, Long, Int, Long) = {
     val m0 = FrameCache.missCount.get()
-    val res = b.getData(req).get
-    (res, FrameCache.missCount.get() - m0)
+    val (res, jobs, shuffle) = sparkWork(b.getData(req).get)
+    (res, FrameCache.missCount.get() - m0, jobs, shuffle)
   }
 
   /** Each frame of `got` equals the `got.width`×`got.height` window of
@@ -206,29 +207,57 @@ class WarpSpec extends SparkSpec {
     }
   }
 
-  test("a new window gathers from the cached native frame: one miss, a crop of the grid") {
+  private def req(b: Bbox, w: Int, h: Int) = RasterRequest(b, "EPSG:28992", w, h,
+    Some(Instant.ofEpochMilli(T0)), Some(Instant.ofEpochMilli(T0 + Hour)))
+
+  test("a window inside one native tile is one narrow job over the cached native frame") {
     FrameCache.clear()
-    def req(b: Bbox, w: Int, h: Int) = RasterRequest(b, "EPSG:28992", w, h,
-      Some(Instant.ofEpochMilli(T0)), Some(Instant.ofEpochMilli(T0 + Hour)))
-    val (full, mFull) = served(table, req(Bbox(0, 0, gw, gh), gw, gh))
+    val (full, mFull, _, _) = served(table, req(Bbox(0, 0, gw, gh), gw, gh))
     assert(mFull == 1, "the native frame is one entry")
     // a window hanging off the top-right grid corner: nodata outside
     val h0 = FrameCache.hitCount.get()
-    val (off, mOff) = served(table, req(Bbox(7, 3, 13, 9), 6, 6))
-    assert(mOff == 1, "only the window itself may miss")
+    val (off, mOff, jOff, sOff) = served(table, req(Bbox(7, 3, 13, 9), 6, 6))
+    assert(mOff == 0, "a map-only window gets no cache entry")
     assert(FrameCache.hitCount.get() > h0, "the native frame must be a hit")
+    assert(jOff == 1 && sOff == 0, s"$jOff jobs, $sOff shuffle bytes")
     assertCrop(off, full, gh - 9, 7)
     // a point on the corner of four cells takes the cell below-right of it
     // (floor of its native pixel coordinates, as MemorySource)
-    val (pt, mPt) = served(table, req(Bbox(4, 2, 4, 2), 1, 1))
-    assert(mPt == 1)
+    val (pt, mPt, jPt, sPt) = served(table, req(Bbox(4, 2, 4, 2), 1, 1))
+    assert(mPt == 0 && jPt == 1 && sPt == 0, s"$mPt misses, $jPt jobs, $sPt shuffle bytes")
     assertCrop(pt, full, gh - 2, 4)
     // a HillShade window at the bottom-left grid corner: its halo hangs
-    // off the grid, as that of the full-grid render does
+    // off the grid, as that of the full-grid render does; the expanded
+    // request fits one tile, so the stencil adds no exchange either
     val shade = HillShade(table)
-    val (shadeFull, _) = served(shade, req(Bbox(0, 0, gw, gh), gw, gh))
-    val (corner, mCorner) = served(shade, req(Bbox(0, 0, 4, 3), 4, 3))
-    assert(mCorner == 1)
+    val (shadeFull, _, _, _) = served(shade, req(Bbox(0, 0, gw, gh), gw, gh))
+    val (corner, mCorner, jCorner, sCorner) = served(shade, req(Bbox(0, 0, 4, 3), 4, 3))
+    assert(mCorner == 0 && jCorner == 1 && sCorner == 0,
+      s"$mCorner misses, $jCorner jobs, $sCorner shuffle bytes")
     assertCrop(corner, shadeFull, gh - 3, 0)
+  }
+
+  test("a window across native tiles takes the cached gather and matches MemorySource") {
+    FrameCache.clear()
+    val (_, mNat, _, _) = served(wide.table, req(Bbox(0, 0, 300, 4), 300, 4))
+    assert(mNat == 1, "the native frame is one entry")
+    // straddles x = 256: its one output tile samples both native tiles
+    val across = req(Bbox(250, 1, 262, 3), 12, 2)
+    val (_, mAcross, _, sAcross) = served(wide.table, across)
+    assert(mAcross == 1, "the gather is one entry")
+    assert(sAcross > 0, "the gather shuffles")
+    compare(across, wide)
+    // inside the 44-column second native tile: map-only again
+    val right = req(Bbox(260, 0, 300, 4), 40, 4)
+    val (_, mRight, jRight, sRight) = served(wide.table, right)
+    assert(mRight == 0 && jRight == 1 && sRight == 0,
+      s"$mRight misses, $jRight jobs, $sRight shuffle bytes")
+    compare(right, wide)
+    // the single-tile stencil over the gathered window is a crop of the
+    // full-grid render, whose expanded request takes the halo exchange
+    val shade = HillShade(wide.table)
+    val (shadeFull, _, _, _) = served(shade, req(Bbox(0, 0, 300, 4), 300, 4))
+    val (shadeAcross, _, _, _) = served(shade, across)
+    assertCrop(shadeAcross, shadeFull, 1, 250)
   }
 }

@@ -326,6 +326,22 @@ class WmsSpec extends SparkSpec {
     assert(threads.forall(!_.isAlive) && poolThreads.isEmpty, "pool threads outlive stop()")
   }
 
+  test("an oversized GetMap answers 400 before any Spark job starts") {
+    val view = tableRaster(4, 4, 1)
+    val layers = URLEncoder.encode(view.toJson, "UTF-8")
+    val side = math.sqrt(RequestGuards.rasterLimitPixels.toDouble).toInt + 1
+    val server = new WmsServer(spark).start()
+    try {
+      val ((status, body), jobs, _) = sparkWork(get(
+        s"http://127.0.0.1:${server.boundPort}/wms?layers=$layers" +
+          s"&bbox=0,0,4,4&width=$side&height=$side&projection=EPSG:28992" +
+          "&time=1970-01-01T00:00:00Z"))
+      assert(status == 400, new String(body, "UTF-8"))
+      assert(new String(body, "UTF-8").contains("in-memory limit"))
+      assert(jobs == 0, s"the refused request started $jobs jobs")
+    } finally server.stop()
+  }
+
   test("an engine fault answers 500, not a client 400") {
     val view = tableRaster(4, 4, 1, "raise_error('boom')")
     val layers = URLEncoder.encode(view.toJson, "UTF-8")
