@@ -56,6 +56,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val wall0 = System.nanoTime()
+    // optional subset run (regex on lane names) — the scale soaks bench
+    // one lane family (e.g. '^p') at a synthetic SF without paying for
+    // the whole suite
+    val names =
+      Lanes.select(filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")).map(_.name)
     val calibration = calibrate()
     val calibrationMt = calibrateMt()
     println(s"""{"bench_calibration_sec":$calibration,"bench_calibration_mt_sec":$calibrationMt}""")
@@ -76,12 +81,6 @@ object Bench {
     // back-to-back samples of p12/r15 inside one slow window). A query
     // that throws is recorded with an "err" marker instead of a fake
     // timing — a broken query must not look like a fast one.
-    // optional subset run (regex on query names) — the scale soaks bench
-    // one query family (e.g. '^p') at a synthetic SF without paying for
-    // the whole suite
-    val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
-    val names = SparkEntry.queries.keys.toSeq
-      .filter(n => filter.forall(_.findFirstIn(n).isDefined))
     def runPass(pass: Int): Map[String, (Either[String, Double], Long)] =
       names.map { name =>
         val ((ts, err), peak) =

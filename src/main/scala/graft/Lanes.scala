@@ -3,10 +3,32 @@ package graft
 import java.lang.management.{ManagementFactory, MemoryType}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
+import graft.contract.Lane
 
-/** The lane runner `Bench` and `tools.Prof` share: one timed action, one
-  * per-lane heap peak and one untimed warmup. */
+/** The lane runner `Bench`, `Verify` and `tools.Prof` share: one lane
+  * selection, one timed action, one per-lane heap peak and one untimed
+  * warmup. */
 object Lanes {
+  /** The lanes a driver runs, in registry order: those in the
+    * comma-separated `names` when given, else those whose name the regex
+    * `filter` finds, else all. A name that is not a lane, or a selection
+    * with no lane, fails naming the input. */
+  def select(names: Option[String] = None, filter: Option[String] = None)
+      : Seq[Lane] = {
+    val lanes = names match {
+      case Some(list) =>
+        val want = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+        val unknown = want -- SparkEntry.queries.keySet
+        require(unknown.isEmpty, s"not a lane: ${unknown.toSeq.sorted.mkString(", ")}")
+        SparkEntry.lanes.filter(l => want(l.name))
+      case None =>
+        val re = filter.map(_.r)
+        SparkEntry.lanes.filter(l => re.forall(_.findFirstIn(l.name).isDefined))
+    }
+    require(lanes.nonEmpty, s"no lane selected by ${names.orElse(filter).getOrElse("")}")
+    lanes
+  }
+
   /** Runs lane `name` to completion. A `noop` write computes every column
     * of the result, as `Verify`'s parquet write does; `.count()` would let
     * Catalyst prune ScalaUDFs and whole joins on 30 of the 179 lanes. */

@@ -47,6 +47,13 @@ object GeomFunctions extends Serializable {
   }
   /** Parse WKB through the per-thread 2-entry memo above.
     *
+    * Why the memo stays: an interleaved memo-on/off re-measure of the lanes
+    * that use it (z01, z02, g20, g22, g28, g29, r28 at sf0.1, fresh JVMs),
+    * with r29 as a control lane that never parses WKB, found no difference
+    * beyond the control's own ±40% swing (OPTIMIZATION_r17.md §5). It is
+    * kept because it turns 4 parses of one geometry into 1 on the extent,
+    * zonal and refinement paths at no measured cost.
+    *
     * CONTRACT: the returned Geometry is SHARED across calls on this
     * thread — callers MUST treat it as immutable. Never call
     * `apply(CoordinateFilter)`, `normalize()`, `geometryChanged()` or
@@ -54,7 +61,6 @@ object GeomFunctions extends Serializable {
     * caller must use [[readWkb]] (and `.copy()` before editing), or it
     * silently corrupts results for unrelated rows that hit the memo. */
   def readWkbCached(b: Array[Byte]): Geometry = {
-    if (memoOff) return readWkb(b)
     val m = wkbMemoTL.get
     val b0 = m(0).asInstanceOf[Array[Byte]]
     if (b0 != null && java.util.Arrays.equals(b0, b)) {
@@ -77,10 +83,6 @@ object GeomFunctions extends Serializable {
   }
   private val SlotA: AnyRef = java.lang.Integer.valueOf(0)
   private val SlotB: AnyRef = java.lang.Integer.valueOf(2)
-  /** Measurement escape hatch: -Dgraft.wkb.memo.off=true bypasses the
-    * memo (every call re-parses). Read once at class init, so the JIT
-    * folds the branch away in the common (memo on) configuration. */
-  private val memoOff = java.lang.Boolean.getBoolean("graft.wkb.memo.off")
 
   /** Per-thread single-entry memo for the request's constant filter WKT:
     * predicate UDFs run once per row, and re-parsing (plus re-indexing)

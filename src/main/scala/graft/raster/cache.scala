@@ -15,14 +15,13 @@ import graft.core.Block
   * windows (a map tile, a point) are narrow plans over the native frame
   * and add no entry.
   *
-  * Bounded LRU (default 32 frames); evicted entries are unpersisted.
-  * Scoped per SparkSession so frames never leak across sessions. Disable
-  * with `spark.graft.frameCache=false`; size with
-  * `-Dgraft.frameCache.maxEntries=N`.
+  * Bounded LRU of 32 frames; evicted entries are unpersisted. Scoped per
+  * SparkSession so frames never leak across sessions. The session conf
+  * `spark.graft.frameCache=false` disables it: perfbench's traced tiles
+  * replay sets it to time a frame build with no cached entry.
   */
 object FrameCache {
-  private val MaxEntries =
-    sys.props.get("graft.frameCache.maxEntries").map(_.toInt).getOrElse(32)
+  private val MaxEntries = 32
 
   private final case class Key(sessionId: Int, token: String, req: RasterRequest)
 

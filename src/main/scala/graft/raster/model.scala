@@ -1,6 +1,7 @@
 package graft.raster
 
 import java.time.Instant
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cell dtypes mirroring the numpy dtypes of the reference data model
   * (SURVEY §1.5). Values are physically computed/stored as Double in the
@@ -141,6 +142,33 @@ object TileLayout {
   def numTiles(w: Int, h: Int): Int = tilesX(w) * tilesY(h)
   def tileW(width: Int, tx: Int): Int = math.min(TILE, width - tx * TILE)
   def tileH(height: Int, ty: Int): Int = math.min(TILE, height - ty * TILE)
+
+  /** `frame` densified to every tile of a `width`×`height` grid at every
+    * time in `timesMs`: a (t, ty, tx) shell of times × tiles rows
+    * left-joins the frame, and a tile the frame lacks gets `fill` in each
+    * of its cells, so downstream `zip_with` alignment holds. */
+  def densify(frame: DataFrame, width: Int, height: Int, timesMs: Seq[Long],
+      fill: Double)(implicit spark: SparkSession): DataFrame = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val nTiles = numTiles(width, height)
+    val nTx = tilesX(width)
+    val ts = timesMs.toIndexedSeq
+    val shell = spark.range(ts.length.toLong * nTiles).mapPartitions { it =>
+      it.map { i =>
+        val t = ts((i / nTiles).toInt)
+        val ti = (i % nTiles).toInt
+        (t, ti / nTx, ti % nTx)
+      }
+    }.toDF("t", "ty", "tx")
+    shell.join(frame, Seq("t", "ty", "tx"), "left")
+      .select(col("t"), col("ty"), col("tx"),
+        coalesce(col("values"), {
+          val tw = least(lit(TILE), lit(width) - col("tx") * TILE)
+          val th = least(lit(TILE), lit(height) - col("ty") * TILE)
+          array_repeat(lit(fill), (tw * th).cast("int"))
+        }).as("values"))
+  }
 }
 
 /** Collected raster response for tests / the single-request API:

@@ -210,8 +210,6 @@ case class TableRasterSource(
       entries.foreach { e => out(e.getInt(0)) = e.getDouble(1) }
       out
     }
-    val nTx = TileLayout.tilesX(gridW)
-    val nTiles = TileLayout.numTiles(gridW, gridH)
     // input-size-derived shuffle parallelism for the cell pivot
     graft.Tuning.autoConfigure(spark, path)
     val df = spark.read.parquet(path)
@@ -236,20 +234,6 @@ case class TableRasterSource(
       .select(col("t"), col("ty"), col("tx"), col("values"))
     // densify: tiles with no table rows at all (fully padded) still need a
     // nodata tile so downstream zip_with alignment holds
-    import spark.implicits._
-    val allTiles = spark.range(timesMs.length.toLong * nTiles).mapPartitions { it =>
-      it.map { i =>
-        val t = timesMs((i / nTiles).toInt)
-        val tile = (i % nTiles).toInt
-        (t, tile / nTx, tile % nTx)
-      }
-    }.toDF("t", "ty", "tx")
-    allTiles.join(df, Seq("t", "ty", "tx"), "left")
-      .select(col("t"), col("ty"), col("tx"),
-        coalesce(col("values"), {
-          val tw = least(lit(TileLayout.TILE), lit(gridW) - col("tx") * TileLayout.TILE)
-          val th = least(lit(TileLayout.TILE), lit(gridH) - col("ty") * TileLayout.TILE)
-          array_repeat(lit(nd), (tw * th).cast("int"))
-        }).as("values"))
+    TileLayout.densify(df, gridW, gridH, timesMs, nd)
   }
 }

@@ -851,21 +851,6 @@ case class Place(store: RasterBlock, placeProjection: String,
     // the statistic's empty value (0 for sum/count, nodata otherwise —
     // exactly what the kernel computes for an all-nodata sample buffer)
     val emptyVal = mergeValues(Array.fill(coords.length)(nd), nd)
-    val nOTiles = TileLayout.numTiles(req.width, req.height)
-    val ts = times.map(_.toEpochMilli).toIndexedSeq
-    val allTiles = spark.range(ts.length.toLong * nOTiles).mapPartitions { it =>
-      it.map { i =>
-        val t = ts((i / nOTiles).toInt)
-        val ti = (i % nOTiles).toInt
-        (t, ti / nOtx, ti % nOtx)
-      }
-    }.toDF("t", "ty", "tx")
-    allTiles.join(gathered, Seq("t", "ty", "tx"), "left")
-      .select(col("t"), col("ty"), col("tx"),
-        coalesce(col("values"), {
-          val tw = least(lit(tile), lit(r.width) - col("tx") * tile)
-          val th = least(lit(tile), lit(r.height) - col("ty") * tile)
-          array_repeat(lit(emptyVal), (tw * th).cast("int"))
-        }).as("values"))
+    TileLayout.densify(gathered, r.width, r.height, times.map(_.toEpochMilli), emptyVal)
   }
 }

@@ -159,24 +159,7 @@ object WarpStage {
     // nodata tiles (the frame() contract is times × numTiles rows). When
     // every output tile maps to a native tile, the gather already has them
     // all (the native frame holds every frame of every tile).
-    if (p.covers) return gathered
-    val req = p.req
-    val nOTiles = TileLayout.numTiles(req.width, req.height)
-    val nOtx = TileLayout.tilesX(req.width)
-    val ts = timesMs.toIndexedSeq
-    val allTiles = spark.range(ts.length.toLong * nOTiles).mapPartitions { it =>
-      it.map { i =>
-        val t = ts((i / nOTiles).toInt)
-        val ti = (i % nOTiles).toInt
-        (t, ti / nOtx, ti % nOtx)
-      }
-    }.toDF("t", "ty", "tx")
-    allTiles.join(gathered, Seq("t", "ty", "tx"), "left")
-      .select(col("t"), col("ty"), col("tx"),
-        coalesce(col("values"), {
-          val tw = least(lit(TileLayout.TILE), lit(req.width) - col("tx") * TileLayout.TILE)
-          val th = least(lit(TileLayout.TILE), lit(req.height) - col("ty") * TileLayout.TILE)
-          array_repeat(lit(nd), (tw * th).cast("int"))
-        }).as("values"))
+    if (p.covers) gathered
+    else TileLayout.densify(gathered, p.req.width, p.req.height, timesMs, nd)
   }
 }

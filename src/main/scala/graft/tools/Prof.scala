@@ -50,9 +50,8 @@ object Prof {
   }
 
   def sweep(spark: SparkSession, sfDir: String): Unit = {
-    val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => filter.forall(_.findFirstIn(n).isDefined))
+    val names =
+      Lanes.select(filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")).map(_.name)
     Lanes.warmup(spark, sfDir)
     val results = names.map { name =>
       val ((ts, err), peak) =
@@ -143,7 +142,7 @@ object Prof {
       args.toList match {
         case "lanes" :: sfDir :: reps :: explainDir :: names :: Nil =>
           lanes(spark, sfDir, reps.toInt, explainDir,
-            names.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+            Lanes.select(Some(names)).map(_.name))
         case "sweep" :: sfDir :: Nil => sweep(spark, sfDir)
         case "gen" :: out :: rest =>
           val copies = rest.headOption.filter(_ != "neardup").map(_.toInt).getOrElse(10)
