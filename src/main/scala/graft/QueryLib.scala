@@ -48,7 +48,7 @@ object QueryLib {
     // session tuned for one data decade survives the next without
     // hand-set configs — see graft.Tuning
     Tuning.autoConfigure(s, dir)
-    normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
+    normalizeTs(Tables.read(s, s"$dir/$name.parquet"))
   }
 
   // ---------------------------------------------------------------- raster

@@ -86,19 +86,12 @@ object Tuning {
     else FileIO.size(p)
   }
 
-  /** Per-session applied-dir memo, keyed on the session OBJECT through
-    * a weak reference: reference identity can't collide the way an
-    * identity-hash string can once the first session is GC'd (a reused
-    * hash silently skipped the policy for the same dir), and a dead
-    * session's entry vanishes with it instead of growing the memo
-    * unboundedly in a long-lived JVM. */
-  private val applied = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.util.Set[String]]())
+  /** Per-session applied-dir memo. */
+  private val applied = new PerSession(
+    () => java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
 
   private def firstSight(spark: SparkSession, key: String): Boolean =
-    applied.computeIfAbsent(spark,
-      _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    ).add(key)
+    applied(spark).add(key)
 
   /** Apply the policy for queries over the tables at `dir` (memoized
     * per (session, dir); called from the engine's table entry points).

@@ -78,13 +78,11 @@ case class CsvWktSource(url: String, proj: String = "EPSG:4326",
   override def projection: String = proj
 
   override def frame(req: GeometryRequest)(implicit spark: SparkSession): DataFrame = {
-    val df0 = spark.read
-      .option("header", "true").option("inferSchema", "true")
-      // RFC 4180 doubled-quote escapes (univocity defaults to backslash);
-      // multiLine so quoted embedded newlines (which the sink emits) don't
-      // split one record into broken rows on read-back
-      .option("escape", "\"").option("multiLine", "true")
-      .csv(url)
+    // RFC 4180 doubled-quote escapes (univocity defaults to backslash);
+    // multiLine so quoted embedded newlines (which the sink emits) don't
+    // split one record into broken rows on read-back
+    val df0 = graft.Tables.read(spark, url, "csv", Map("header" -> "true",
+      "escape" -> "\"", "multiLine" -> "true"))
     val gc = geomCol
     val hasFid = df0.schema.fields.exists(f => f.name == "fid" &&
       (f.dataType == LongType || f.dataType == IntegerType))

@@ -146,7 +146,7 @@ case class TableGeometrySource(
   override def frame(req: GeometryRequest)(implicit spark: SparkSession): DataFrame = {
     // input-size-derived shuffle parallelism (memoized; see graft.Tuning)
     graft.Tuning.autoConfigure(spark, path)
-    var df = spark.read.parquet(path)
+    var df = graft.Tables.read(spark, path)
     df = df.select((expr(fidExpr).cast("long").as("fid") +:
       columnNames.map(c => expr(c))) ++
       geomWktExpr.map(g => GeomFunctions.stGeomFromWkt(expr(g)).as("geometry")).toSeq: _*)

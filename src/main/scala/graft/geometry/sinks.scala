@@ -222,7 +222,7 @@ case class GeoParquetSource(url: String, proj: String = "EPSG:28992") extends Ge
   }
   override def projection: String = proj
   override def frame(req: GeometryRequest)(implicit spark: SparkSession): DataFrame = {
-    var df = spark.read.parquet(url)
+    var df = graft.Tables.read(spark, url)
       .withColumn("geometry", GeomFunctions.stGeomFromWkt(col("geometry_wkt")))
       .drop("geometry_wkt")
     // bbox columns give sargable pushdown before the exact predicate

@@ -73,7 +73,7 @@ case class RasterParquetSource(url: String) extends RasterBlock {
       req.height == num("height").toInt,
       "RasterParquetSource serves the stored grid only")
     val wanted = timesIn(req.start, req.stop).map(_.toEpochMilli)
-    spark.read.parquet(s"$url/tiles").filter(col("t").isin(wanted: _*))
+    graft.Tables.read(spark, s"$url/tiles").filter(col("t").isin(wanted: _*))
   }
 }
 

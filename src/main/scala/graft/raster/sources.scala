@@ -212,7 +212,7 @@ case class TableRasterSource(
     }
     // input-size-derived shuffle parallelism for the cell pivot
     graft.Tuning.autoConfigure(spark, path)
-    val df = spark.read.parquet(path)
+    val df = graft.Tables.read(spark, path)
       .select(expr(idExpr).cast("long").as("id"),
         when(expr(noDataFilter), lit(nd)).otherwise(expr(valueExpr).cast("double")).as("v"))
       .filter(col("id") >= 0)

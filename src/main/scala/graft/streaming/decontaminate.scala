@@ -49,7 +49,21 @@ object StreamDecontaminate {
     * and identical (tokenizeWords mirrors Dedup.shingles' words(), the
     * fnv64-oracle rule, including the short-doc single shingle and the
     * empty-doc "" shingle; null text contributes nothing, as
-    * explode(null) did). */
+    * explode(null) did).
+    *
+    * Why the per-partition cap is maxGrams + 1 and no smaller:
+    * partitions share grams, so a set capped at c < maxGrams + 1 that
+    * fills up proves only that its partition holds c distinct grams;
+    * the union of truncated sets can stay within maxGrams while the
+    * global distinct count is over it, and a truncated set is no longer
+    * exact. Only a set that reaches maxGrams + 1 proves the overflow.
+    * Heap bound this implies: a seqOp task holds one set of at most
+    * maxGrams + 1 grams and a combOp at most two (its accumulator and
+    * the incoming set), so an executor running k tasks at once holds at
+    * most (k + 1) × (maxGrams + 1) grams, and the driver at most
+    * 2 × (maxGrams + 1) — about (k + 1) GB and 2 GB at the default
+    * [[MaxEvalGrams]] (~1 GB per full set, see its doc). An eval side
+    * near that size belongs on `Decontaminate.overlapBloom`. */
   def evalGrams(evalDocs: DataFrame, textCol: String, n: Int,
       maxGrams: Int = MaxEvalGrams): Broadcast[Set[String]] = {
     val spark = evalDocs.sparkSession

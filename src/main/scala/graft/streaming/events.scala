@@ -20,7 +20,7 @@ object EventStream {
     * encoding the generator used (nanos-as-long, NTZ micros, or plain
     * TIMESTAMP), then normalize `ts` exactly like the batch path. */
   def eventSource(spark: SparkSession, dir: String): DataFrame = {
-    val fileSchema: StructType = spark.read.parquet(dir).schema
+    val fileSchema: StructType = graft.Tables.read(spark, dir).schema
     QueryLib.normalizeTs(spark.readStream.schema(fileSchema).parquet(dir))
   }
 

@@ -18,6 +18,18 @@ class PlanSpec extends SparkSpec {
     assert(q.contains("ReadSchema: struct<l_partkey:bigint,l_extendedprice:double>"))
   }
 
+  test("lowering a lane again starts no Spark job: table schemas are " +
+      "read once per session, and the filter still reaches the scan") {
+    for (name <- Seq("q03_broadcast_filter", "g02_field_ops")) {
+      SparkEntry.queries(name)(spark, dir)
+      assert(sparkWork(SparkEntry.queries(name)(spark, dir))._2 == 0, name)
+    }
+    assert(plan("q03_broadcast_filter")
+      .matches("(?s).*PushedFilters: \\[[^\\]]*LessThan\\(p_size,20\\).*"))
+    val part = s"$dir/part.parquet"
+    assert(Tables.read(spark, part).schema == spark.read.parquet(part).schema)
+  }
+
   test("small dimensions broadcast in join queries") {
     val p = plan("q02_join_revenue")
     assert(p.contains("BroadcastHashJoin"))
