@@ -26,8 +26,13 @@ import org.apache.spark.sql.SparkSession
   * operating range real clusters run (shuffle-file fan-out per map
   * task is the only cost of a generous initial count under AQE).
   *
-  * Escape hatch: `-Dgraft.tuning.auto=false` disables the policy; an
-  * explicitly configured `initialPartitionNum` is never lowered.
+  * An explicitly configured `initialPartitionNum` is never lowered.
+  *
+  * Kept without an off switch: on `local[4]` the policy raises the count
+  * only above ~85 MiB of input (`ceil(bytes * 3 / 64 MiB) > 4`), and the
+  * largest test scale, sf0.1, is 17 MB, so the test suite, `Verify` and
+  * perfbench run identically with or without it; it stays for the sf10
+  * win measured above.
   */
 object Tuning {
 
@@ -104,11 +109,10 @@ object Tuning {
   /** [[autoConfigure]] with caller-supplied input bytes — the DSv2
     * connectors pass their own archive listings (fgb parts, raster
     * datasets) whose data files are not `.parquet`. `bytes` is
-    * by-name: not evaluated when the policy is off or the key is
-    * already applied. */
+    * by-name: not evaluated when AQE is off or the key is already
+    * applied. */
   def autoConfigureBytes(spark: SparkSession, key: String,
       bytes: => Long): Unit = {
-    if (sys.props.get("graft.tuning.auto").contains("false")) return
     // An explicitly disabled AQE is a user decision about plan behavior
     // for the whole session — the policy must not override it (the
     // initial-partition knob is inert without AQE anyway).

@@ -76,6 +76,16 @@ trait Block extends Product with Serializable {
   final def toJson: String = Json.render(serialize)
 }
 
+/** A Block that reads files. `paths` names every file or directory it
+  * opens; a server evaluating client views refuses one whose paths leave
+  * its data roots (`WmsServer`), so mixing this in confines a new source.
+  * The default is the `url` a codec source reads. Paths found by reading
+  * `url` (a VRT's members) follow it lazily, so `url` is checked first. */
+trait FileSource extends Block {
+  def url: String
+  def paths: Seq[String] = Seq(url)
+}
+
 /** Placeholder node with a user-supplied name for partial evaluation,
   * after `DummyBlock` (core/graphs.py:293-308). It stands in for a node of
   * ANY kind — raster, geometry, or series — so reference-emitted partial
@@ -109,8 +119,8 @@ case class DummyBlock(dummyName: String) extends graft.raster.RasterBlock
 }
 
 /** Registry of Block constructors for deserializing JSON v2 views
-  * (the role of `construct` / `construct_multiple`, core/graphs.py:52-82).
-  * Operators self-register a `Seq[Any] => Block` factory keyed by class name.
+  * (the role of `construct` / `construct_multiple`, core/graphs.py:52-82):
+  * a `Seq[Any] => Block` factory per class name, filled from [[Builtins]].
   */
 object BlockRegistry {
   private val factories =
@@ -123,43 +133,52 @@ object BlockRegistry {
     * (Long/Double/String/Boolean/List/null) to the declared parameter
     * classes. Covers the common shapes: numbers, strings, options, blocks,
     * Seq[Double], Seq[(Double, Double)] (2-lists), Seq[String], tuples of
-    * numbers. Blocks with exotic arg shapes register a custom factory. */
-  def registerAuto(cls: Class[_ <: Block]): Unit = register(cls.getName) { args =>
+    * numbers. Erasure hides an Option's element type, so an option holds
+    * a Double for any number unless its index is in `longOptions`. */
+  private def auto(cls: Class[_ <: Block],
+      longOptions: Set[Int] = Set.empty): Seq[Any] => Block = {
     val ctor = cls.getConstructors.maxBy(_.getParameterCount)
     val types = ctor.getParameterTypes
-    require(types.length == args.length,
-      s"${cls.getName}: expected ${types.length} args, got ${args.length}")
-    val coerced = args.zip(types).map { case (a, t) => coerce(a, t) }
-    try ctor.newInstance(coerced.map(_.asInstanceOf[AnyRef]): _*)
-      .asInstanceOf[Block]
-    catch { // surface the constructor's own error, not the reflect wrapper
-      case e: java.lang.reflect.InvocationTargetException =>
-        throw new IllegalArgumentException(
-          s"${cls.getName}(${coerced.mkString(", ")}): ${e.getCause}",
-          e.getCause)
+    args => {
+      require(types.length == args.length,
+        s"${cls.getName}: expected ${types.length} args, got ${args.length}")
+      val coerced = args.zip(types).zipWithIndex.map {
+        case ((a, t), i) if longOptions(i) =>
+          coerce(a, t).asInstanceOf[Option[Any]].map(num(_).toLong)
+        case ((a, t), _) => coerce(a, t)
+      }
+      try ctor.newInstance(coerced.map(_.asInstanceOf[AnyRef]): _*)
+        .asInstanceOf[Block]
+      catch { // surface the constructor's own error, not the reflect wrapper
+        case e: java.lang.reflect.InvocationTargetException =>
+          throw new IllegalArgumentException(
+            s"${cls.getName}(${coerced.mkString(", ")}): ${e.getCause}",
+            e.getCause)
+      }
     }
   }
 
+  private def num(v: Any): Double = v match {
+    case d: Double => d; case l: Long => l.toDouble; case i: Int => i.toDouble
+    case other => other.toString.toDouble
+  }
+
+  /** A JSON optional literal: absent, null or `None` is `None`. */
+  private def opt(a: Any): Option[Any] = a match {
+    case null | None => None
+    case Some(v)     => Some(v)
+    case v           => Some(v)
+  }
+
   private def coerce(a: Any, t: Class[_]): Any = {
-    def num(v: Any): Double = v match {
-      case d: Double => d; case l: Long => l.toDouble; case i: Int => i.toDouble
-      case other => other.toString.toDouble
-    }
     if (t == classOf[Int] || t == java.lang.Integer.TYPE) num(a).toInt
     else if (t == classOf[Long] || t == java.lang.Long.TYPE) num(a).toLong
     else if (t == classOf[Double] || t == java.lang.Double.TYPE) num(a)
     else if (t == classOf[Boolean] || t == java.lang.Boolean.TYPE)
       a.toString.toBoolean
     else if (t == classOf[String]) a.toString
-    else if (t == classOf[Option[_]]) {
-      def wrap(v: Any): Option[Any] = Some(v match {
-        case l: Long => l.toDouble; case i: Int => i.toDouble; case x => x
-      })
-      a match {
-        case null | None => None
-        case Some(v)     => wrap(v)
-        case v           => wrap(v)
-      }
+    else if (t == classOf[Option[_]]) opt(a).map {
+      case l: Long => l.toDouble; case i: Int => i.toDouble; case x => x
     }
     else if (classOf[Block].isAssignableFrom(t)) a.asInstanceOf[Block]
     else if (classOf[Seq[_]].isAssignableFrom(t)) a match {
@@ -186,226 +205,160 @@ object BlockRegistry {
     else a
   }
 
+  /** The built-in Blocks, each named once: the reference module that
+    * holds it (None for engine-only classes) with its classes. Every
+    * class is registered under its engine name; one under a module is
+    * also registered under the reference's import path
+    * `<module>.<SimpleName>` (core/graphs.py:229-249 get_import_path), so
+    * reference-emitted JSON constructs unchanged. */
+  private[graft] lazy val Builtins: Seq[(Option[String], Seq[Class[_ <: Block]])] = {
+    import graft.raster._
+    import graft.geometry._
+    def ref(module: String) = Some(s"dask_geomodeling.$module")
+    Seq(
+      ref("raster.elemwise") -> Seq(classOf[Add], classOf[Subtract],
+        classOf[Multiply], classOf[Divide], classOf[Power], classOf[Equal],
+        classOf[NotEqual], classOf[Greater], classOf[GreaterEqual],
+        classOf[Less], classOf[LessEqual], classOf[Invert], classOf[And],
+        classOf[Or], classOf[Xor], classOf[IsData], classOf[IsNoData],
+        classOf[Exp], classOf[Log], classOf[Log10], classOf[FillNoData]),
+      ref("raster.misc") -> Seq(classOf[Clip], classOf[Mask],
+        classOf[MaskBelow], classOf[Step], classOf[graft.raster.Classify],
+        classOf[Reclassify], classOf[RasterizeWKT], classOf[Rasterize]),
+      ref("raster.temporal") -> Seq(classOf[Snap], classOf[Shift],
+        classOf[TemporalSum], classOf[TemporalAggregate], classOf[Cumulative],
+        classOf[Resample]),
+      ref("raster.spatial") -> Seq(classOf[Dilate], classOf[MovingMax],
+        classOf[Smooth], classOf[HillShade], classOf[Place]),
+      ref("raster.combine") -> Seq(classOf[Group]),
+      ref("raster.reduction") -> Seq(classOf[Max]),
+      ref("geometry.field_operations") -> Seq(classOf[FieldOps.Add],
+        classOf[FieldOps.Subtract], classOf[FieldOps.Multiply],
+        classOf[FieldOps.Divide], classOf[FieldOps.FloorDivide],
+        classOf[FieldOps.Power], classOf[FieldOps.Modulo],
+        classOf[FieldOps.Equal], classOf[FieldOps.NotEqual],
+        classOf[FieldOps.Greater], classOf[FieldOps.GreaterEqual],
+        classOf[FieldOps.Less], classOf[FieldOps.LessEqual],
+        classOf[FieldOps.And], classOf[FieldOps.Or], classOf[FieldOps.Xor],
+        classOf[FieldOps.Invert], classOf[FieldOps.Where],
+        classOf[FieldOps.Mask], classOf[FieldOps.Round],
+        classOf[FieldOps.Classify], classOf[FieldOps.ClassifyFromColumns],
+        classOf[FieldOps.Interp], classOf[FieldOps.Choose]),
+      ref("geometry.geom_operations") -> Seq(classOf[Area]),
+      ref("geometry.set_operations") -> Seq(classOf[Difference],
+        classOf[Intersection]),
+      ref("geometry.constructive") -> Seq(classOf[Buffer], classOf[Simplify]),
+      ref("geometry.text") -> Seq(classOf[ParseTextColumn]),
+      ref("geometry.merge") -> Seq(classOf[MergeGeometryBlocks]),
+      ref("geometry.aggregate") -> Seq(classOf[AggregateRaster],
+        classOf[AggregateRasterAboveThreshold]),
+      ref("geometry.base") -> Seq(classOf[GetSeriesBlock],
+        classOf[SetSeriesBlock]),
+      ref("geometry.sources") -> Seq(classOf[GeometryWKTSource],
+        classOf[GeometryFileSource]),
+      ref("core.graphs") -> Seq(classOf[DummyBlock]),
+      None -> Seq(classOf[Reduce], classOf[RasterTiler], classOf[MemorySource],
+        classOf[TableRasterSource], classOf[RasterParquetSource],
+        classOf[GeoTiffSource], classOf[AsciiGridSource], classOf[XyzSource],
+        classOf[PngSource], classOf[EnviSource], classOf[NetCdfSource],
+        classOf[Hdf5Source], classOf[ZarrSource], classOf[GribSource],
+        classOf[GpkgRasterSource], classOf[VrtSource],
+        classOf[TableGeometrySource], classOf[GeoParquetSource],
+        classOf[GeometryTiler], classOf[GeoJsonSource],
+        classOf[ShapefileSource], classOf[GeoPackageSource],
+        classOf[GmlSource], classOf[FlatGeobufSource], classOf[CsvWktSource],
+        classOf[KmlSource], classOf[GpxSource], classOf[MifSource],
+        classOf[DxfSource], classOf[TabSource]))
+  }
+
+  /** Engine constructors the generic coercion cannot fill: the zonal
+    * aggregates' `maxPixels` (index 5) is an Option[Long], a text parse's
+    * key mapping holds (key, column, type) triples, and a memory raster
+    * holds pixel arrays. */
+  private lazy val engineFactories: Map[Class[_ <: Block], Seq[Any] => Block] = {
+    import graft.geometry._
+    val parseText = auto(classOf[ParseTextColumn])
+    Map(
+      classOf[AggregateRaster] -> auto(classOf[AggregateRaster], Set(5)),
+      classOf[AggregateRasterAboveThreshold] ->
+        auto(classOf[AggregateRasterAboveThreshold], Set(5)),
+      classOf[ParseTextColumn] -> (args => parseText(args.updated(2,
+        args(2).asInstanceOf[Seq[Any]].map {
+          case Seq(k, c, t) => (k.toString, c.toString, t.toString)
+          case other => other
+        }))),
+      classOf[graft.raster.MemorySource] -> graft.raster.MemorySource.fromArgs)
+  }
+
+  /** Reference spellings whose arguments differ in shape from the engine
+    * constructor's. */
+  private lazy val referenceFactories: Map[Class[_ <: Block], Seq[Any] => Block] = {
+    import graft.raster._
+    import graft.geometry.{GeometryBlock, GeometryFileSource, SetSeriesBlock}
+    def pt(a: Any): (Double, Double) = a match {
+      case s: Seq[_] if s.size == 2 => (num(s.head), num(s(1)))
+      case p: (_, _) => (num(p._1), num(p._2))
+      case other => throw new IllegalArgumentException(s"not a point: $other")
+    }
+    Map(
+      // Rasterize serializes (source, column_name, dtype, limit)
+      // (raster/misc.py:548-560): dtype defaults by column presence, and
+      // `limit` is the reference's feature-count guard — the engine guards
+      // through RequestGuards instead, so the value is accepted and dropped
+      classOf[Rasterize] -> { args =>
+        val colName = opt(args.lift(1).orNull).map(_.toString)
+        val dtype = opt(args.lift(2).orNull).map(_.toString)
+          .getOrElse(if (colName.isEmpty) "bool" else "int32")
+        Rasterize(args.head.asInstanceOf[GeometryBlock], colName, dtype)
+      },
+      // the reference's Place serializes FIVE args — (store, projection,
+      // anchor tuple, coordinate tuples, statistic) — never the
+      // engine-only modeHint
+      classOf[Place] -> { args =>
+        Place(args.head.asInstanceOf[RasterBlock], args(1).toString,
+          pt(args(2)), args(3).asInstanceOf[Seq[Any]].map(pt),
+          args.lift(4).map(_.toString).getOrElse("last"))
+      },
+      // combine.Group / reduction.Max serialize VARIADIC member blocks
+      // (BaseCombine.__init__(*args)); collect them into the Seq parameter
+      classOf[Group] -> (args => Group(args.map(_.asInstanceOf[RasterBlock]))),
+      classOf[Max] -> (args => Max(args.map(_.asInstanceOf[RasterBlock]))),
+      // SetSeriesBlock serializes VARIADIC (column, value) pairs
+      // (geometry/base.py:240-300); fold them into a chain
+      classOf[SetSeriesBlock] -> { args =>
+        args.tail.grouped(2).foldLeft(args.head.asInstanceOf[GeometryBlock]) {
+          case (acc, Seq(name, value)) => SetSeriesBlock(acc, name.toString, value)
+          case (_, other) => throw new IllegalArgumentException(
+            s"SetSeriesBlock: dangling column without a value: $other")
+        }
+      },
+      // GeometryFileSource(url, layer, id_field): the engine's codecs adopt
+      // the fid column natively, so id_field needs no mapping
+      classOf[GeometryFileSource] -> { args =>
+        GeometryFileSource(args.head.toString.stripPrefix("file://"),
+          opt(args.lift(1).orNull).map(_.toString), None)
+      })
+  }
+
   /** Register the standard operator inventory. Idempotent. */
   lazy val registerBuiltins: Unit = {
-    import graft.raster._
-    Seq[Class[_ <: Block]](
-      classOf[Add], classOf[Subtract], classOf[Multiply], classOf[Divide],
-      classOf[Power], classOf[Equal], classOf[NotEqual], classOf[Greater],
-      classOf[GreaterEqual], classOf[Less], classOf[LessEqual], classOf[Invert],
-      classOf[And], classOf[Or], classOf[Xor], classOf[IsData], classOf[IsNoData],
-      classOf[Exp], classOf[Log], classOf[Log10], classOf[FillNoData],
-      classOf[Clip], classOf[Mask], classOf[MaskBelow], classOf[Step],
-      classOf[Classify], classOf[Reclassify], classOf[Group], classOf[Max],
-      classOf[Reduce], classOf[Snap], classOf[Shift], classOf[TemporalSum],
-      classOf[TemporalAggregate], classOf[Cumulative], classOf[Resample],
-      classOf[Dilate], classOf[MovingMax], classOf[Smooth], classOf[HillShade],
-      classOf[Place], classOf[RasterizeWKT], classOf[Rasterize],
-      classOf[TableRasterSource], classOf[RasterParquetSource], classOf[RasterTiler],
-      classOf[GeoTiffSource], classOf[AsciiGridSource], classOf[XyzSource],
-      classOf[PngSource], classOf[EnviSource], classOf[NetCdfSource]
-    ).foreach(registerAuto)
-    Seq[Class[_ <: Block]](
-      classOf[graft.geometry.GetSeriesBlock], classOf[graft.geometry.SetSeriesBlock],
-      classOf[graft.geometry.TableGeometrySource], classOf[graft.geometry.GeometryWKTSource],
-      classOf[graft.geometry.MergeGeometryBlocks], classOf[graft.geometry.ParseTextColumn],
-      classOf[graft.geometry.Buffer], classOf[graft.geometry.Simplify],
-      classOf[graft.geometry.Difference], classOf[graft.geometry.Intersection],
-      classOf[graft.geometry.Area], classOf[graft.geometry.AggregateRaster],
-      classOf[graft.geometry.AggregateRasterAboveThreshold],
-      classOf[graft.geometry.GeoParquetSource], classOf[graft.geometry.GeometryTiler],
-      classOf[graft.geometry.GeoJsonSource], classOf[graft.geometry.ShapefileSource],
-      classOf[graft.geometry.GeoPackageSource], classOf[graft.geometry.GeometryFileSource],
-      classOf[graft.geometry.GmlSource], classOf[graft.geometry.FlatGeobufSource],
-      classOf[graft.geometry.CsvWktSource], classOf[graft.geometry.KmlSource],
-      classOf[graft.geometry.GpxSource], classOf[graft.geometry.MifSource],
-      classOf[graft.geometry.DxfSource]
-    ).foreach(registerAuto)
-    Seq[Class[_ <: Block]](
-      classOf[graft.geometry.FieldOps.Add], classOf[graft.geometry.FieldOps.Subtract],
-      classOf[graft.geometry.FieldOps.Multiply], classOf[graft.geometry.FieldOps.Divide],
-      classOf[graft.geometry.FieldOps.FloorDivide], classOf[graft.geometry.FieldOps.Power],
-      classOf[graft.geometry.FieldOps.Modulo], classOf[graft.geometry.FieldOps.Equal],
-      classOf[graft.geometry.FieldOps.NotEqual], classOf[graft.geometry.FieldOps.Greater],
-      classOf[graft.geometry.FieldOps.GreaterEqual], classOf[graft.geometry.FieldOps.Less],
-      classOf[graft.geometry.FieldOps.LessEqual], classOf[graft.geometry.FieldOps.And],
-      classOf[graft.geometry.FieldOps.Or], classOf[graft.geometry.FieldOps.Xor],
-      classOf[graft.geometry.FieldOps.Invert], classOf[graft.geometry.FieldOps.Where],
-      classOf[graft.geometry.FieldOps.Mask], classOf[graft.geometry.FieldOps.Round],
-      classOf[graft.geometry.FieldOps.Classify],
-      classOf[graft.geometry.FieldOps.ClassifyFromColumns],
-      classOf[graft.geometry.FieldOps.Interp], classOf[graft.geometry.FieldOps.Choose]
-    ).foreach(registerAuto)
-    // custom factories where erasure defeats the generic coercion
-    // (Option[Long] maxPixels, Option[Double] pixelSize side by side)
-    register(classOf[graft.geometry.AggregateRaster].getName) { args =>
-      def optD(a: Any): Option[Double] = a match {
-        case null | None => None
-        case Some(v) => Some(v.toString.toDouble)
-        case v => Some(v.toString.toDouble)
-      }
-      graft.geometry.AggregateRaster(
-        args(0).asInstanceOf[graft.geometry.GeometryBlock],
-        args(1).asInstanceOf[graft.raster.RasterBlock],
-        args(2).toString,
-        args(3) match { case null | None => None; case Some(v) => Some(v.toString); case v => Some(v.toString) },
-        optD(args(4)), optD(args(5)).map(_.toLong), args(6).toString,
-        args(7).toString.toBoolean)
+    for ((module, classes) <- Builtins; cls <- classes) {
+      register(cls.getName)(engineFactories.getOrElse(cls, auto(cls)))
+      module.foreach(m => register(s"$m.${cls.getSimpleName}")(
+        referenceFactories.getOrElse(cls, args => construct(cls.getName, args))))
     }
-    register(classOf[graft.geometry.AggregateRasterAboveThreshold].getName) { args =>
-      def optD(a: Any): Option[Double] = a match {
-        case null | None => None
-        case Some(v) => Some(v.toString.toDouble)
-        case v => Some(v.toString.toDouble)
-      }
-      graft.geometry.AggregateRasterAboveThreshold(
-        args(0).asInstanceOf[graft.geometry.GeometryBlock],
-        args(1).asInstanceOf[graft.raster.RasterBlock],
-        args(2).toString,
-        args(3) match { case null | None => None; case Some(v) => Some(v.toString); case v => Some(v.toString) },
-        optD(args(4)), optD(args(5)).map(_.toLong), args(6).toString,
-        args(7).toString)
-    }
-    graft.raster.MemorySource.ensureRegistered()
-
-    // --- reference-dialect aliases -------------------------------------
-    // A view serialized by the Python reference names every block by its
-    // import path (core/graphs.py:229-249 get_import_path), e.g.
-    // "dask_geomodeling.raster.elemwise.Add". Alias those spellings onto
-    // the engine factories so reference-emitted JSON constructs unchanged.
-    // Forwarding through construct() keeps late binding with the custom
-    // factories registered above.
-    def alias(refPath: String, cls: Class[_ <: Block]): Unit =
-      register(refPath)(args => construct(cls.getName, args))
-    def aliasAll(module: String, classes: Seq[Class[_ <: Block]]): Unit =
-      classes.foreach(c => alias(s"$module.${c.getSimpleName}", c))
-
-    aliasAll("dask_geomodeling.raster.elemwise", Seq(
-      classOf[Add], classOf[Subtract], classOf[Multiply], classOf[Divide],
-      classOf[Power], classOf[Equal], classOf[NotEqual], classOf[Greater],
-      classOf[GreaterEqual], classOf[Less], classOf[LessEqual], classOf[Invert],
-      classOf[And], classOf[Or], classOf[Xor], classOf[IsData],
-      classOf[IsNoData], classOf[Exp], classOf[Log], classOf[Log10],
-      classOf[FillNoData]))
-    aliasAll("dask_geomodeling.raster.misc", Seq(
-      classOf[Clip], classOf[Mask], classOf[MaskBelow], classOf[Step],
-      classOf[Classify], classOf[Reclassify], classOf[RasterizeWKT]))
-    // Rasterize serializes (source, column_name, dtype, limit)
-    // (raster/misc.py:548-560): dtype defaults by column presence, and
-    // `limit` is the reference's feature-count guard — the engine guards
-    // through RequestGuards instead, so the value is accepted and dropped
-    register("dask_geomodeling.raster.misc.Rasterize") { args =>
-      def opt(v: Any): Option[String] = v match {
-        case null | None => None
-        case Some(x) => Some(x.toString)
-        case x => Some(x.toString)
-      }
-      val colName = opt(args.lift(1).orNull)
-      val dtype = opt(args.lift(2).orNull)
-        .getOrElse(if (colName.isEmpty) "bool" else "int32")
-      Rasterize(args.head.asInstanceOf[graft.geometry.GeometryBlock],
-        colName, dtype)
-    }
-    aliasAll("dask_geomodeling.raster.temporal", Seq(
-      classOf[Snap], classOf[Shift], classOf[TemporalSum],
-      classOf[TemporalAggregate], classOf[Cumulative], classOf[Resample]))
-    aliasAll("dask_geomodeling.raster.spatial", Seq(
-      classOf[Dilate], classOf[MovingMax], classOf[Smooth],
-      classOf[HillShade]))
-    // the reference's Place serializes FIVE args — (store, projection,
-    // anchor tuple, coordinate tuples, statistic) — never the engine-only
-    // modeHint; registerAuto's strict arity would reject them
-    register("dask_geomodeling.raster.spatial.Place") { args =>
-      def pt(a: Any): (Double, Double) = a match {
-        case s: Seq[_] if s.size == 2 =>
-          (s.head.toString.toDouble, s(1).toString.toDouble)
-        case p: (_, _) => (p._1.toString.toDouble, p._2.toString.toDouble)
-        case other => throw new IllegalArgumentException(s"not a point: $other")
-      }
-      Place(args.head.asInstanceOf[RasterBlock], args(1).toString,
-        pt(args(2)), args(3).asInstanceOf[Seq[Any]].map(pt),
-        args.lift(4).map(_.toString).getOrElse("last"))
-    }
-    // the reference's combine.Group / reduction.Max serialize VARIADIC
-    // member blocks (BaseCombine.__init__(*args)); collect them into the
-    // engine's Seq parameter
-    register("dask_geomodeling.raster.combine.Group")(args =>
-      Group(args.map(_.asInstanceOf[RasterBlock])))
-    register("dask_geomodeling.raster.reduction.Max")(args =>
-      Max(args.map(_.asInstanceOf[RasterBlock])))
     // RasterFileSource(url, time_first, time_delta) — urls arrive as the
-    // reference's safe_file_url "file://" form; format dispatch by
-    // extension mirrors GDAL's driver autodetection (tif/asc/xyz/png)
+    // reference's safe_file_url "file://" form; the format is chosen the
+    // way GDAL's driver autodetection would (graft.raster.RasterFormat)
     register("dask_geomodeling.raster.sources.RasterFileSource") { args =>
-      RasterFileSource(args.head.toString.stripPrefix("file://"),
-        args(1).toString.toDouble.toLong, args(2).toString.toDouble.toLong)
+      graft.raster.RasterFileSource(args.head.toString.stripPrefix("file://"),
+        num(args(1)).toLong, num(args(2)).toLong)
     }
-
-    aliasAll("dask_geomodeling.geometry.field_operations", Seq(
-      classOf[graft.geometry.FieldOps.Add], classOf[graft.geometry.FieldOps.Subtract],
-      classOf[graft.geometry.FieldOps.Multiply], classOf[graft.geometry.FieldOps.Divide],
-      classOf[graft.geometry.FieldOps.FloorDivide], classOf[graft.geometry.FieldOps.Power],
-      classOf[graft.geometry.FieldOps.Modulo], classOf[graft.geometry.FieldOps.Equal],
-      classOf[graft.geometry.FieldOps.NotEqual], classOf[graft.geometry.FieldOps.Greater],
-      classOf[graft.geometry.FieldOps.GreaterEqual], classOf[graft.geometry.FieldOps.Less],
-      classOf[graft.geometry.FieldOps.LessEqual], classOf[graft.geometry.FieldOps.And],
-      classOf[graft.geometry.FieldOps.Or], classOf[graft.geometry.FieldOps.Xor],
-      classOf[graft.geometry.FieldOps.Invert], classOf[graft.geometry.FieldOps.Where],
-      classOf[graft.geometry.FieldOps.Mask], classOf[graft.geometry.FieldOps.Round],
-      classOf[graft.geometry.FieldOps.Classify],
-      classOf[graft.geometry.FieldOps.ClassifyFromColumns],
-      classOf[graft.geometry.FieldOps.Interp], classOf[graft.geometry.FieldOps.Choose]))
-    alias("dask_geomodeling.geometry.geom_operations.Area",
-      classOf[graft.geometry.Area])
-    alias("dask_geomodeling.geometry.set_operations.Difference",
-      classOf[graft.geometry.Difference])
-    alias("dask_geomodeling.geometry.set_operations.Intersection",
-      classOf[graft.geometry.Intersection])
-    alias("dask_geomodeling.geometry.constructive.Buffer",
-      classOf[graft.geometry.Buffer])
-    alias("dask_geomodeling.geometry.constructive.Simplify",
-      classOf[graft.geometry.Simplify])
-    alias("dask_geomodeling.geometry.text.ParseTextColumn",
-      classOf[graft.geometry.ParseTextColumn])
-    alias("dask_geomodeling.geometry.merge.MergeGeometryBlocks",
-      classOf[graft.geometry.MergeGeometryBlocks])
-    alias("dask_geomodeling.geometry.aggregate.AggregateRaster",
-      classOf[graft.geometry.AggregateRaster])
-    alias("dask_geomodeling.geometry.aggregate.AggregateRasterAboveThreshold",
-      classOf[graft.geometry.AggregateRasterAboveThreshold])
-    alias("dask_geomodeling.geometry.base.GetSeriesBlock",
-      classOf[graft.geometry.GetSeriesBlock])
-    // SetSeriesBlock serializes VARIADIC (column, value) pairs
-    // (geometry/base.py:240-300); fold them into a chain
-    register("dask_geomodeling.geometry.base.SetSeriesBlock") { args =>
-      args.tail.grouped(2).foldLeft(args.head.asInstanceOf[graft.geometry.GeometryBlock]) {
-        case (acc, Seq(name, value)) =>
-          graft.geometry.SetSeriesBlock(acc, name.toString, value)
-        case (_, other) => throw new IllegalArgumentException(
-          s"SetSeriesBlock: dangling column without a value: $other")
-      }
-    }
-    alias("dask_geomodeling.geometry.sources.GeometryWKTSource",
-      classOf[graft.geometry.GeometryWKTSource])
-    // GeometryFileSource(url, layer, id_field): the engine's codecs adopt
-    // the fid column natively, so id_field needs no mapping
-    register("dask_geomodeling.geometry.sources.GeometryFileSource") { args =>
-      val layer = args.lift(1) match {
-        case None | Some(null) | Some(None) => None
-        case Some(Some(v)) => Some(v.toString)
-        case Some(v) => Some(v.toString)
-      }
-      graft.geometry.GeometryFileSource(
-        args.head.toString.stripPrefix("file://"), layer, None)
-    }
-    alias("dask_geomodeling.core.graphs.DummyBlock", classOf[DummyBlock])
   }
 
   def construct(className: String, args: Seq[Any]): Block =
     factories.get(className) match {
       case Some(f) => f(args)
-      case None if className == classOf[DummyBlock].getName =>
-        DummyBlock(args.head.toString)
       case None =>
         throw new IllegalArgumentException(s"unregistered block class: $className")
     }

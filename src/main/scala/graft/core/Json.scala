@@ -87,6 +87,11 @@ object Json {
         case 't' => expect("true"); true
         case 'f' => expect("false"); false
         case 'n' => expect("null"); null
+        // non-finite doubles as `render` and Python's json.dumps write them
+        case 'N' => expect("NaN"); Double.NaN
+        case 'I' => expect("Infinity"); Double.PositiveInfinity
+        case '-' if s.startsWith("-Infinity", pos) =>
+          expect("-Infinity"); Double.NegativeInfinity
         case _   => parseNumber()
       }
     }

@@ -60,7 +60,7 @@ object CsvWkt {
 /** Distributed CSV reader: schema by Spark's csv inference, geometry from
   * the WKT column, fid from an integral `fid` column (else row order). */
 case class CsvWktSource(url: String, proj: String = "EPSG:4326",
-    geometryColumn: Option[String] = None) extends GeometryBlock {
+    geometryColumn: Option[String] = None) extends GeometryBlock with graft.core.FileSource {
 
   // fail fast: CSV carries no CRS metadata, so the caller's proj IS the
   // declaration — validate it at construction like the sibling sources

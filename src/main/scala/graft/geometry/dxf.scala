@@ -366,7 +366,7 @@ object DxfSink {
   * CRS from `.prj` sidecar or the projection argument. Bounded
   * single-file codec. */
 case class DxfSource(url: String, projectionArg: String = "")
-    extends GeometryBlock {
+    extends GeometryBlock with graft.core.FileSource {
 
   @transient private lazy val drawing: Dxf.Drawing = Dxf.read(url)
 

@@ -1147,7 +1147,7 @@ object FgbMeta {
   * searches the index and touches only intersecting features — real bbox
   * pushdown, unlike the shapefile's full scan. */
 case class FlatGeobufSource(url: String, proj: String = "EPSG:4326")
-    extends GeometryBlock {
+    extends GeometryBlock with graft.core.FileSource {
   import FlatGeobuf._
 
   // fail fast on the fallback CRS (used when the file declares none)

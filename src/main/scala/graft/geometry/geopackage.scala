@@ -349,7 +349,7 @@ object GeoPackage {
   * as plain WKB columns.
   */
 case class GeoPackageSource(url: String, table: Option[String] = None)
-    extends GeometryBlock {
+    extends GeometryBlock with graft.core.FileSource {
 
   @transient private lazy val meta: (GeoPackage.FeatureTable, Sqlite.MasterRow,
       Seq[(String, String)], Int) = {
@@ -472,7 +472,7 @@ case class GeoPackageSource(url: String, table: Option[String] = None)
   * must not be relabeled WGS84).
   */
 case class GeometryFileSource(url: String, layer: Option[String] = None,
-    proj: Option[String] = None) extends GeometryBlock {
+    proj: Option[String] = None) extends GeometryBlock with graft.core.FileSource {
 
   @transient private lazy val delegate: GeometryBlock = {
     val lower = url.toLowerCase

@@ -556,7 +556,8 @@ object GmlSink {
   * executor partitions; column names and types come from the `.xsd` sidecar
   * (falling back to string attrs sampled from the head of the document when
   * the sidecar is missing). */
-case class GmlSource(url: String, proj: String = "EPSG:28992") extends GeometryBlock {
+case class GmlSource(url: String, proj: String = "EPSG:28992")
+    extends GeometryBlock with graft.core.FileSource {
 
   // fail fast on the caller's fallback CRS (the document's own srsName is
   // validated separately and ignored when unsupported)

@@ -395,7 +395,7 @@ object GpxSink {
   * selects `waypoints` (default) or `tracks`; schema from a head sample;
   * element parsing a narrow map over a `</wpt>`/`</trk>`-split text scan. */
 case class GpxSource(url: String, layer: String = "waypoints")
-    extends GeometryBlock {
+    extends GeometryBlock with graft.core.FileSource {
   require(layer == "waypoints" || layer == "tracks",
     s"GPX layer must be waypoints or tracks, got '$layer'")
 

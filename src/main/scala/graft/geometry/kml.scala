@@ -305,7 +305,7 @@ object KmlSink {
 /** Distributed KML reader: always EPSG:4326 (the KML datum); schema from
   * the document's `Schema` declaration (head read), placemark parsing a
   * narrow map over a `</Placemark>`-split text scan. */
-case class KmlSource(url: String) extends GeometryBlock {
+case class KmlSource(url: String) extends GeometryBlock with graft.core.FileSource {
 
   @transient private lazy val fields: Seq[(String, String)] = {
     if (!graft.io.FileIO.exists(url) || graft.io.FileIO.isDirectory(url)) Seq.empty

@@ -382,7 +382,7 @@ object MifSink {
   * `.prj`/argument fallback; a leading integer `fid` column (what the sink
   * writes) becomes the feature id. Bounded single-file codec. */
 case class MifSource(url: String, projectionArg: String = "")
-    extends GeometryBlock {
+    extends GeometryBlock with graft.core.FileSource {
 
   @transient private lazy val ds: Mif.Dataset = Mif.read(url)
 

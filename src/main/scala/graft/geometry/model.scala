@@ -137,7 +137,8 @@ case class TableGeometrySource(
     columnNames: Seq[String],
     geomWktExpr: Option[String] = None,
     proj: String = "EPSG:28992"
-) extends GeometryBlock {
+) extends GeometryBlock with graft.core.FileSource {
+  def url: String = path
   override def columns: Set[String] =
     columnNames.map(c => c.split("(?i)\\s+as\\s+").last.trim).toSet ++
       (if (geomWktExpr.isDefined) Set("geometry") else Set.empty)

@@ -543,7 +543,7 @@ object Shapefile {
   * engine's native store is (geo)parquet.
   */
 case class ShapefileSource(url: String, proj: String = "EPSG:28992")
-    extends GeometryBlock {
+    extends GeometryBlock with graft.core.FileSource {
 
   @transient private lazy val header = Shapefile.readDbfHeader(
     url.stripSuffix(".shp") + ".dbf")

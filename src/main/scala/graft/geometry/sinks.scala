@@ -187,7 +187,8 @@ object GeometryFileSink {
 }
 
 /** Re-open a written feature store. */
-case class GeoParquetSource(url: String, proj: String = "EPSG:28992") extends GeometryBlock {
+case class GeoParquetSource(url: String, proj: String = "EPSG:28992")
+    extends GeometryBlock with graft.core.FileSource {
   /** Plan-time schema read from the parquet footer of one part file, like
     * the reference source declares its real columns
     * (geometry/sources.py:44-56) — so `getSeries` on a reopened store
@@ -303,7 +304,7 @@ object GeometryToFile {
   * are sampled from the head of each part file; feature parsing itself is
   * a narrow executor-side map over the distributed text scan. */
 case class GeoJsonSource(url: String, proj: String = "EPSG:4326",
-    fullSchema: Boolean = false) extends GeometryBlock {
+    fullSchema: Boolean = false) extends GeometryBlock with graft.core.FileSource {
 
   private def typeName(v: Any): String = v match {
     case _: Long | _: Int => "long"

@@ -476,7 +476,7 @@ object Tab {
   * recognized when persisted, attribute types from the `.tab` Fields
   * block, CRS from the CoordSys clause / `.prj` sidecar / argument. */
 case class TabSource(url: String, projectionArg: String = "")
-    extends GeometryBlock {
+    extends GeometryBlock with graft.core.FileSource {
 
   @transient private lazy val ds: Tab.Dataset = Tab.read(url)
 

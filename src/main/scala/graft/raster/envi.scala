@@ -248,7 +248,7 @@ object Envi {
   * pixel bytes are touched until a frame is requested. */
 case class EnviSource(url: String, timeFirstMs: Long = 0L,
     timeDeltaMsArg: Long = 300000L, projectionArg: String = "")
-    extends RasterBlock {
+    extends RasterBlock with graft.core.FileSource {
 
   @transient private lazy val header: Envi.Header =
     Envi.readHeader(url, projectionArg)

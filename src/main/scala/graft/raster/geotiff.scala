@@ -1107,7 +1107,7 @@ case class GeoTiffSink(source: RasterBlock, url: String,
   * Temporal directories (one file per frame) keep the eager MemorySource
   * path — they are bounded exports. */
 case class GeoTiffSource(url: String, timeFirstMs: Long = 0L,
-    timeDeltaMsArg: Long = 300000L) extends RasterBlock {
+    timeDeltaMsArg: Long = 300000L) extends RasterBlock with graft.core.FileSource {
   private lazy val files: Seq[String] = {
     val p = Paths.get(url)
     if (Files.isDirectory(p)) {

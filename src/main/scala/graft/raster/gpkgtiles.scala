@@ -253,7 +253,7 @@ object GpkgTiles {
   * 16-bit grayscale with 65535 = nodata; `zoomArg` picks a level
   * (default: the deepest). */
 case class GpkgRasterSource(url: String, zoomArg: Int = -1)
-    extends RasterBlock {
+    extends RasterBlock with graft.core.FileSource {
 
   @transient private lazy val meta: GpkgTiles.Meta =
     GpkgTiles.readMeta(url, zoomArg)

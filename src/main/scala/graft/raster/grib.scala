@@ -1852,7 +1852,7 @@ object Grib {
 /** GRIB2 raster source: each field is one time frame; time-sliced
   * requests decode only the selected fields' byte ranges. */
 case class GribSource(url: String, noDataArg: Double = Double.MaxValue)
-    extends RasterBlock {
+    extends RasterBlock with graft.core.FileSource {
 
   private def withChannel[A](f: PositionedReader => A): A = {
     val ch = PositionedReader.open(url)

@@ -347,7 +347,7 @@ object PngWorld {
   * one frame; a directory of same-extension files is a frame per file in
   * name order (the sinks' own export layout). Text formats have no header
   * section, so metadata requires the (bounded) decode — memoized once. */
-sealed trait GridFileRasterSource extends RasterBlock {
+sealed trait GridFileRasterSource extends RasterBlock with graft.core.FileSource {
   def url: String
   def timeFirstMs: Long
   def timeDeltaMsArg: Long
@@ -416,56 +416,68 @@ case class PngSource(url: String, timeFirstMs: Long = 0L,
     PngWorld.read(path, projectionArg, noDataArg)
 }
 
+/** The one raster format probe: which codec reads a path. A Zarr store
+  * (a directory holding a store marker, or any `.zarr` name) is `zarr`;
+  * any other directory has no kind of its own. A file is known by its
+  * extension, except that NetCDF-4 files ARE HDF5 containers behind the
+  * same extensions, so `.nc`/`.nc4`/`.h5`/`.hdf5` route on the magic
+  * bytes (`h5` or `nc`). [[RasterFileSource]], the `graft-raster`
+  * connector and [[Zarr.readMeta]] all decide here. */
+object RasterFormat {
+  private val byExtension: Seq[(String, String)] = Seq(
+    ".tif" -> "tif", ".tiff" -> "tif", ".asc" -> "asc", ".xyz" -> "xyz",
+    ".png" -> "png", ".hdr" -> "envi", ".dat" -> "envi", ".img" -> "envi",
+    ".nc" -> "nc", ".nc4" -> "nc", ".h5" -> "nc", ".hdf5" -> "nc",
+    ".gpkg" -> "gpkg", ".grib" -> "grib", ".grib2" -> "grib",
+    ".grb" -> "grib", ".grb2" -> "grib", ".vrt" -> "vrt")
+
+  val extensions: Seq[String] = byExtension.map(_._1)
+
+  /** The kind of a file, by extension (NetCDF/HDF5 by magic). */
+  def fileKind(path: String): Option[String] = {
+    val n = graft.io.FileIO.name(path).toLowerCase
+    byExtension.collectFirst { case (e, k) if n.endsWith(e) => k }
+      .map(k => if (k == "nc" && Hdf5.isHdf5(path)) "h5" else k)
+  }
+
+  /** The kind of a path: `zarr` for a store, none for any other
+    * directory, else [[fileKind]]. */
+  def kindOf(path: String): Option[String] =
+    if (graft.io.FileIO.name(path).toLowerCase.endsWith(".zarr")) Some("zarr")
+    else if (!graft.io.FileIO.isDirectory(path)) fileKind(path)
+    else Some("zarr").filter(_ => Zarr.isStore(path))
+}
+
 /** Extension-dispatching factory matching the reference's GDAL-backed
   * `RasterFileSource(url, time_first, time_delta)` surface
-  * (raster/sources.py:396-564): one constructor, format chosen by file
-  * extension. Directories dispatch on their first matching file. */
+  * (raster/sources.py:396-564): one constructor, format chosen by
+  * [[RasterFormat]]. Directories dispatch on their first matching file. */
 object RasterFileSource {
-  private val known =
-    Seq(".tif", ".tiff", ".asc", ".xyz", ".png", ".hdr", ".dat", ".img",
-      ".nc", ".nc4", ".h5", ".hdf5", ".gpkg", ".grib", ".grib2", ".grb",
-      ".grb2", ".vrt")
-
   def apply(url: String, timeFirstMs: Long = 0L,
       timeDeltaMs: Long = 300000L): RasterBlock = {
-    import graft.io.FileIO
-    // a Zarr store is a DIRECTORY (no file extension): dispatch on the
-    // .zgroup marker (or the conventional .zarr directory suffix)
-    if (url.toLowerCase.endsWith(".zarr") ||
-      (FileIO.isDirectory(url) &&
-        (FileIO.exists(FileIO.child(url, ".zgroup")) ||
-          FileIO.exists(FileIO.child(url, "zarr.json")))))
-      return ZarrSource(url)
-    val probe =
-      if (FileIO.isDirectory(url)) {
-        FileIO.list(url)
-          .find(f => known.exists(f.toLowerCase.endsWith))
-          .getOrElse(throw new IllegalArgumentException(
-            s"$url: no raster files (${known.mkString(", ")})"))
-      } else url
-    val lower = probe.toLowerCase
-    if (lower.endsWith(".tif") || lower.endsWith(".tiff"))
-      GeoTiffSource(url, timeFirstMs, timeDeltaMs)
-    else if (lower.endsWith(".asc")) AsciiGridSource(url, timeFirstMs, timeDeltaMs)
-    else if (lower.endsWith(".xyz")) XyzSource(url, timeFirstMs, timeDeltaMs)
-    else if (lower.endsWith(".png")) PngSource(url, timeFirstMs, timeDeltaMs)
-    else if (lower.endsWith(".hdr") || lower.endsWith(".dat") ||
-      lower.endsWith(".img"))
-      EnviSource(probe, timeFirstMs, timeDeltaMs)
-    else if (lower.endsWith(".nc") || lower.endsWith(".nc4") ||
-      lower.endsWith(".h5") || lower.endsWith(".hdf5"))
-      // NetCDF-4 files ARE HDF5 containers behind the same extension:
-      // route on the magic bytes, not the name
-      (if (Hdf5.isHdf5(probe)) Hdf5Source(probe) else NetCdfSource(probe))
-    else if (lower.endsWith(".gpkg"))
-      GpkgRasterSource(probe) // tile pyramid (vector gpkg → GeometryFileSource)
-    else if (lower.endsWith(".grib") || lower.endsWith(".grib2") ||
-      lower.endsWith(".grb") || lower.endsWith(".grb2"))
-      GribSource(probe)
-    else if (lower.endsWith(".vrt"))
-      VrtSource(probe, timeFirstMs, timeDeltaMs)
-    else throw new IllegalArgumentException(
-      s"$url: unsupported raster format (${known.mkString(", ")})")
+    def formats = RasterFormat.extensions.mkString(", ")
+    val (probe, kind) = RasterFormat.kindOf(url).map(url -> _).getOrElse {
+      require(graft.io.FileIO.isDirectory(url),
+        s"$url: unsupported raster format ($formats)")
+      graft.io.FileIO.list(url).iterator
+        .flatMap(f => RasterFormat.fileKind(f).map(f -> _)).nextOption()
+        .getOrElse(throw new IllegalArgumentException(
+          s"$url: no raster files ($formats)"))
+    }
+    kind match {
+      case "zarr" => ZarrSource(url)
+      case "tif" => GeoTiffSource(url, timeFirstMs, timeDeltaMs)
+      case "asc" => AsciiGridSource(url, timeFirstMs, timeDeltaMs)
+      case "xyz" => XyzSource(url, timeFirstMs, timeDeltaMs)
+      case "png" => PngSource(url, timeFirstMs, timeDeltaMs)
+      case "envi" => EnviSource(probe, timeFirstMs, timeDeltaMs)
+      case "nc" => NetCdfSource(probe)
+      case "h5" => Hdf5Source(probe)
+      // tile pyramid (a vector gpkg is a GeometryFileSource)
+      case "gpkg" => GpkgRasterSource(probe)
+      case "grib" => GribSource(probe)
+      case "vrt" => VrtSource(probe, timeFirstMs, timeDeltaMs)
+    }
   }
 }
 

@@ -2203,7 +2203,7 @@ case class Hdf5Sink(source: RasterBlock, url: String,
   * the CF time coordinate IS the time axis; header/coordinate reads are
   * positioned; pixel chunks wait until a frame is requested. */
 case class Hdf5Source(url: String, projectionArg: String = "",
-    varNameArg: String = "") extends RasterBlock {
+    varNameArg: String = "") extends RasterBlock with graft.core.FileSource {
 
   private def withChannel[A](f: PositionedReader => A): A = {
     val ch = PositionedReader.open(url)

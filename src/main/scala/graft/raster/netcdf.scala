@@ -679,7 +679,7 @@ object NetCdf {
   * header + coordinate reads only; pixel bytes wait until a frame is
   * requested. Multiple data variables select via `varNameArg`. */
 case class NetCdfSource(url: String, projectionArg: String = "",
-    varNameArg: String = "") extends RasterBlock {
+    varNameArg: String = "") extends RasterBlock with graft.core.FileSource {
 
   private def withChannel[A](f: PositionedReader => A): A = {
     val ch = PositionedReader.open(url)

@@ -38,7 +38,7 @@ case class RasterParquetSink(source: RasterBlock, url: String) {
 }
 
 /** Re-open a written raster store as a RasterBlock. */
-case class RasterParquetSource(url: String) extends RasterBlock {
+case class RasterParquetSource(url: String) extends RasterBlock with graft.core.FileSource {
   private lazy val manifest: Map[String, Any] = {
     val txt = Files.readString(Paths.get(url.stripPrefix("file:"), "manifest.json"))
     Json.parse(txt).asInstanceOf[Map[String, Any]]

@@ -3,7 +3,6 @@ package graft.raster
 import java.time.Instant
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.BlockRegistry
 
 /** In-memory `(t, y, x)` array source, after the reference `MemorySource`
   * (dask_geomodeling/raster/sources.py:157-393, shared read/warp kernel
@@ -108,9 +107,9 @@ case class MemorySource(
 }
 
 object MemorySource {
-  /** Forces companion initialization so the custom factory below is live. */
-  def ensureRegistered(): Unit = ()
-  BlockRegistry.register(classOf[MemorySource].getName) { args =>
+  /** The view-JSON factory ([[graft.core.BlockRegistry]]): pixel arrays arrive as
+    * number lists. */
+  def fromArgs(args: Seq[Any]): MemorySource = {
     val Seq(data, gw, gh, nd, proj, ps, ox, oy, tf, fd, dt, md) = args
     MemorySource(
       data.asInstanceOf[Seq[Any]].map {
@@ -160,7 +159,9 @@ case class TableRasterSource(
     frameDeltaMs0: Long = 3600000L,
     dtypeName: String = "float64",
     projection: String = "EPSG:28992"
-) extends RasterBlock {
+) extends RasterBlock with graft.core.FileSource {
+
+  def url: String = path
 
   override def dtype: DType = DType.byName(dtypeName)
   override def temporal: Boolean = frames > 1

@@ -45,7 +45,36 @@ object Vrt {
 
   private case class RectAttrs(x: Int, y: Int, w: Int, h: Int)
 
+  /** A `<SimpleSource>` as written: absent rects not yet resolved. */
+  private case class Pending(file: String, band: Int,
+      src: Option[RectAttrs], dst: Option[RectAttrs])
+
+  /** Every `SourceFilename` of the descriptor at `path`, `relativeToVRT`
+    * resolved, without opening any of them. */
+  def sourceFiles(path: String): Seq[String] =
+    parse(path)._2.flatten.map(_.file).distinct
+
   def readMeta(path: String): Meta = {
+    val (m, pending) = parse(path)
+    m.copy(bands = pending.map(_.map { p =>
+      // absent rects default to the whole source / same-size dst at
+      // origin — resolve via a header-only tile read
+      val (sr, dr) = (p.src, p.dst) match {
+        case (Some(a), Some(b)) => (a, b)
+        case _ =>
+          val t = GeoTiff.readMeta(p.file)
+          val full = RectAttrs(0, 0, t.w, t.h)
+          (p.src.getOrElse(full), p.dst.getOrElse(full))
+      }
+      require(sr.w == dr.w && sr.h == dr.h,
+        s"$path: SrcRect ${sr.w}x${sr.h} != DstRect ${dr.w}x${dr.h}" +
+          " (resampling sources not supported)")
+      Src(p.file, p.band, sr.x, sr.y, sr.w, sr.h, dr.x, dr.y)
+    }))
+  }
+
+  /** The descriptor's header (no bands) and its sources as written. */
+  private def parse(path: String): (Meta, Seq[Seq[Pending]]) = {
     val dir = Paths.get(path).toAbsolutePath.getParent
     val text = Files.readString(Paths.get(path))
     val r = inputFactory.get().createXMLStreamReader(new StringReader(text))
@@ -53,8 +82,8 @@ object Vrt {
     var srs = ""
     var gt: Array[Double] = null
     var noData = Double.NaN
-    val bands = Seq.newBuilder[Seq[Src]]
-    var curBand: scala.collection.mutable.ArrayBuffer[Src] = null
+    val bands = Seq.newBuilder[Seq[Pending]]
+    var curBand: scala.collection.mutable.ArrayBuffer[Pending] = null
     // current SimpleSource state
     var inSource = false
     var sFile = ""; var sBand = 1
@@ -105,7 +134,7 @@ object Vrt {
                 require(sub == null,
                   s"$path: VRTRasterBand subClass='$sub' not supported " +
                     "(only plain mosaic bands)")
-                curBand = scala.collection.mutable.ArrayBuffer.empty[Src]
+                curBand = scala.collection.mutable.ArrayBuffer.empty[Pending]
               case "SimpleSource" =>
                 inSource = true; sFile = ""; sBand = 1; sSrc = None; sDst = None
               case "ComplexSource" | "KernelFilteredSource" |
@@ -140,19 +169,7 @@ object Vrt {
                 require(curBand != null,
                   s"$path: SimpleSource outside VRTRasterBand")
                 require(sFile.nonEmpty, s"$path: SimpleSource without file")
-                // absent rects default to the whole source / same-size
-                // dst at origin — resolve via a header-only tile read
-                val (sr, dr) = (sSrc, sDst) match {
-                  case (Some(a), Some(b)) => (a, b)
-                  case _ =>
-                    val m = GeoTiff.readMeta(sFile)
-                    val full = RectAttrs(0, 0, m.w, m.h)
-                    (sSrc.getOrElse(full), sDst.getOrElse(full))
-                }
-                require(sr.w == dr.w && sr.h == dr.h,
-                  s"$path: SrcRect ${sr.w}x${sr.h} != DstRect ${dr.w}x${dr.h}" +
-                    " (resampling sources not supported)")
-                curBand += Src(sFile, sBand, sr.x, sr.y, sr.w, sr.h, dr.x, dr.y)
+                curBand += Pending(sFile, sBand, sSrc, sDst)
                 inSource = false
               case "VRTRasterBand" =>
                 bands += curBand.toSeq; curBand = null
@@ -172,7 +189,8 @@ object Vrt {
     require(allBands.nonEmpty, s"$path: no <VRTRasterBand>")
     val projection =
       if (srs.isEmpty) "" else Proj.normalize(srs)
-    Meta(w, h, projection, gt(0), gt(3), gt(1), -gt(5), noData, allBands)
+    (Meta(w, h, projection, gt(0), gt(3), gt(1), -gt(5), noData, Nil),
+      allBands)
   }
 
   /** Materialize one band: nodata-filled canvas + rect copies from each
@@ -221,9 +239,13 @@ object Vrt {
   * intersects the request window: at scale a mosaic of thousands of
   * tiles serves a city-sized request by touching a handful of files. */
 case class VrtSource(url: String, timeFirstMs: Long = 0L,
-    timeDeltaMsArg: Long = 300000L) extends RasterBlock {
+    timeDeltaMsArg: Long = 300000L) extends RasterBlock with graft.core.FileSource {
 
   @transient private lazy val meta: Vrt.Meta = Vrt.readMeta(url)
+
+  /** The descriptor, then the GeoTIFFs it names. */
+  override def paths: Seq[String] =
+    LazyList(url).lazyAppendedAll(Vrt.sourceFiles(url))
 
   private def nd: Double =
     if (meta.noData.isNaN) Double.MaxValue else meta.noData

@@ -69,6 +69,12 @@ object Zarr {
     }
   }
 
+  /** A Zarr store root: a directory holding a v3 `zarr.json`, a v2
+    * `.zgroup` or consolidated `.zmetadata` document. */
+  def isStore(dir: String): Boolean =
+    FileIO.isDirectory(dir) && Seq("zarr.json", ".zgroup", ".zmetadata")
+      .exists(m => FileIO.exists(FileIO.child(dir, m)))
+
   private def jsonMap(p: String): Map[String, Any] =
     if (!FileIO.exists(p)) Map.empty
     else Json.parse(FileIO.readString(p)) match {
@@ -575,19 +581,14 @@ object Zarr {
     val root = url
     require(FileIO.isDirectory(root), s"$url: not a zarr directory store")
     val zmeta = FileIO.child(root, ".zmetadata")
-    val v3Group = {
-      val zj = jsonMap(FileIO.child(root, "zarr.json"))
-      zj.nonEmpty && {
-        require(asDouble(zj.getOrElse("zarr_format", 0L), "zarr_format") == 3 &&
-          zj.getOrElse("node_type", "") == "group",
-          s"$url: root zarr.json is not a v3 group document")
-        true
-      }
-    }
-    require(v3Group || FileIO.exists(FileIO.child(root, ".zgroup")) ||
-      FileIO.exists(zmeta),
-      s"$url: missing .zgroup / zarr.json (array-only stores are not " +
-        "supported — point at the group directory)")
+    val zj = jsonMap(FileIO.child(root, "zarr.json"))
+    require(zj.isEmpty ||
+      asDouble(zj.getOrElse("zarr_format", 0L), "zarr_format") == 3 &&
+      zj.getOrElse("node_type", "") == "group",
+      s"$url: root zarr.json is not a v3 group document")
+    require(isStore(root),
+      s"$url: missing .zgroup / zarr.json / .zmetadata (array-only stores " +
+        "are not supported — point at the group directory)")
     // consolidated metadata (the xarray convention): every .zarray/.zattrs
     // rides in ONE .zmetadata document — one object read instead of 2N on
     // an object store. Preferred when present; the per-array files remain
@@ -1111,7 +1112,7 @@ object Zarr {
   * coordinate reads; data chunks wait until a frame is requested, and
   * only the chunks of the REQUESTED frames are read (`readFrames`). */
 case class ZarrSource(url: String, projectionArg: String = "",
-    varNameArg: String = "") extends RasterBlock {
+    varNameArg: String = "") extends RasterBlock with graft.core.FileSource {
 
   @transient private lazy val meta: Zarr.Meta =
     Zarr.readMeta(url, projectionArg, varNameArg)

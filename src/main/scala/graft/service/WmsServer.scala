@@ -232,8 +232,9 @@ class WmsServer(spark: SparkSession, port: Int = 0,
     }.toMap
 
   /** Deserialized views name arbitrary filesystem paths in their source
-    * blocks; refuse anything outside the configured data roots so an HTTP
-    * client cannot read and render arbitrary process-readable files. */
+    * blocks; refuse any `FileSource` path outside the configured data
+    * roots so an HTTP client cannot read and render arbitrary
+    * process-readable files. */
   private def validateSourcePaths(view: graft.core.Block): Unit = {
     val roots = dataRoots.map(r =>
       java.nio.file.Paths.get(r).toAbsolutePath.normalize)
@@ -244,28 +245,8 @@ class WmsServer(spark: SparkSession, port: Int = 0,
     }
     def walk(b: graft.core.Block): Unit = {
       b match {
-        case t: graft.raster.TableRasterSource     => check(t.path)
-        case r: graft.raster.RasterParquetSource   => check(r.url)
-        case g: graft.raster.GeoTiffSource         => check(g.url)
-        case g: graft.raster.AsciiGridSource       => check(g.url)
-        case g: graft.raster.XyzSource             => check(g.url)
-        case g: graft.raster.PngSource             => check(g.url)
-        case g: graft.raster.EnviSource            => check(g.url)
-        case g: graft.raster.NetCdfSource          => check(g.url)
-        case g: graft.geometry.GeoParquetSource    => check(g.url)
-        case g: graft.geometry.GeoJsonSource       => check(g.url)
-        case t: graft.geometry.TableGeometrySource => check(t.path)
-        case s: graft.geometry.ShapefileSource     => check(s.url)
-        case s: graft.geometry.GeoPackageSource    => check(s.url)
-        case s: graft.geometry.MifSource           => check(s.url)
-        case s: graft.geometry.DxfSource           => check(s.url)
-        case s: graft.geometry.GmlSource           => check(s.url)
-        case s: graft.geometry.GeometryFileSource  => check(s.url)
-        case s: graft.geometry.FlatGeobufSource    => check(s.url)
-        case s: graft.geometry.CsvWktSource        => check(s.url)
-        case s: graft.geometry.KmlSource           => check(s.url)
-        case s: graft.geometry.GpxSource           => check(s.url)
-        case _                                     =>
+        case f: graft.core.FileSource => f.paths.foreach(check)
+        case _ =>
       }
       b.children.foreach(walk)
     }

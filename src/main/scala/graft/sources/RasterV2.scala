@@ -107,32 +107,12 @@ object GraftRasterTable {
     all
   }
 
-  private def isZarrStore(dir: String): Boolean =
-    graft.io.FileIO.exists(graft.io.FileIO.child(dir, "zarr.json")) ||
-      graft.io.FileIO.exists(graft.io.FileIO.child(dir, ".zgroup")) ||
-      graft.io.FileIO.exists(graft.io.FileIO.child(dir, ".zmetadata"))
+  /** The kinds this connector reads, of those [[graft.raster.RasterFormat]]
+    * names. */
+  private val Kinds = Set("grib", "tif", "nc", "h5", "zarr")
 
-  private def isGrib(p: String): Boolean = {
-    val n = graft.io.FileIO.name(p).toLowerCase
-    n.endsWith(".grib2") || n.endsWith(".grb2") ||
-      n.endsWith(".grib") || n.endsWith(".grb") // editions 1 and 2
-  }
-
-  private def isTif(p: String): Boolean = {
-    val n = graft.io.FileIO.name(p).toLowerCase
-    n.endsWith(".tif") || n.endsWith(".tiff")
-  }
-
-  private def isNcOrH5(p: String): Boolean = {
-    val n = graft.io.FileIO.name(p).toLowerCase
-    n.endsWith(".nc") || n.endsWith(".nc4") || n.endsWith(".h5") ||
-      n.endsWith(".hdf5")
-  }
-
-  /** NetCDF-4 files ARE HDF5 containers behind the same extension:
-    * route on the magic bytes, not the name (the block API's rule). */
-  private def ncKind(path: String): String =
-    if (graft.raster.Hdf5.isHdf5(path)) "h5" else "nc"
+  private def kind(p: String): Option[String] =
+    graft.raster.RasterFormat.kindOf(p).filter(Kinds)
 
   /** Kind of ONE concrete dataset path — the streaming replay planner,
     * which plans from the OFFSET's recorded path set rather than a
@@ -141,19 +121,13 @@ object GraftRasterTable {
     * offset was recorded fails LOUDLY (exact replay needs committed
     * inputs to stay available), never silently drops. */
   def kindOf(p: String): String = {
-    import graft.io.FileIO
-    require(FileIO.exists(p),
+    require(graft.io.FileIO.exists(p),
       s"graft-raster: dataset $p named by the stream offset no longer " +
         "exists — exact replay requires committed inputs to stay available")
-    if (FileIO.isDirectory(p)) {
-      require(isZarrStore(p),
-        s"graft-raster: offset dataset $p is a directory but not a Zarr store")
-      "zarr"
-    } else if (isGrib(p)) "grib"
-    else if (isTif(p)) "tif"
-    else if (isNcOrH5(p)) ncKind(p)
-    else throw new IllegalArgumentException(
-      s"graft-raster: offset dataset $p matches no supported raster format")
+    kind(p).getOrElse(throw new IllegalArgumentException(
+      if (graft.io.FileIO.isDirectory(p))
+        s"graft-raster: offset dataset $p is a directory but not a Zarr store"
+      else s"graft-raster: offset dataset $p matches no supported raster format"))
   }
 
   /** Expand user paths to concrete (kind, path) datasets. A plain
@@ -167,27 +141,16 @@ object GraftRasterTable {
   def datasets(paths: Seq[String], lenient: Boolean): Seq[(String, String)] = paths.flatMap { s =>
     import graft.io.FileIO
     require(FileIO.exists(s), s"graft-raster: $s does not exist")
-    if (FileIO.isDirectory(s)) {
-      if (isZarrStore(s)) Seq(("zarr", s))
-      else {
-        val members = FileIO.list(s)
-        val found = (members.filter(isGrib).map(f => ("grib", f)) ++
-          members.filter(isTif).map(f => ("tif", f)) ++
-          members.filter(f => !FileIO.isDirectory(f) &&
-            isNcOrH5(f)).map(f => (ncKind(f), f)) ++
-          members.filter(d => FileIO.isDirectory(d) &&
-            isZarrStore(d)).map(d => ("zarr", d))).sortBy(_._2)
-        require(lenient || found.nonEmpty,
-          s"graft-raster: directory $s holds no GRIB files, GeoTIFFs, " +
-            "NetCDF/HDF5 files or Zarr stores")
-        found
-      }
-    } else if (isGrib(s)) Seq(("grib", s))
-    else if (isTif(s)) Seq(("tif", s))
-    else if (isNcOrH5(s)) Seq((ncKind(s), s))
-    else throw new IllegalArgumentException(
-      s"graft-raster: $s is not a .grib/.grib2/.tif/.nc/.h5 file or Zarr " +
-        "store (supported: GRIB 1/2, GeoTIFF, NetCDF, HDF5, Zarr v2/v3)")
+    kind(s).map(k => Seq((k, s))).getOrElse {
+      require(FileIO.isDirectory(s),
+        s"graft-raster: $s is not a .grib/.grib2/.tif/.nc/.h5 file or Zarr " +
+          "store (supported: GRIB 1/2, GeoTIFF, NetCDF, HDF5, Zarr v2/v3)")
+      val found = FileIO.list(s).flatMap(f => kind(f).map((_, f))).sortBy(_._2)
+      require(lenient || found.nonEmpty,
+        s"graft-raster: directory $s holds no GRIB files, GeoTIFFs, " +
+          "NetCDF/HDF5 files or Zarr stores")
+      found
+    }
   }
 }
 

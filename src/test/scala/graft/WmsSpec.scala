@@ -175,6 +175,54 @@ class WmsSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  /** A reference-dialect view of one `RasterFileSource` over `path`. */
+  private def referenceFileView(path: String): String =
+    s"""{"version": 2, "name": "src", "graph": {"src": [""" +
+      s""""dask_geomodeling.raster.sources.RasterFileSource", """ +
+      s""""file://$path", 0, 300000]}}"""
+
+  /** A one-band `.vrt` in `vrtDir` whose one member GeoTIFF, a 4×4 tile
+    * over (0, 0, 2, 2) in EPSG:28992, is written to `tifDir`. */
+  private def mosaic(vrtDir: String, tifDir: String): String = {
+    GeoTiff.write(s"$tifDir/member.tif", Array.tabulate(16)(_.toDouble), 4, 4,
+      Bbox(0, 0, 2, 2), 28992, -9999.0, "float64")
+    val vrt = s"$vrtDir/mosaic.vrt"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(vrt),
+      s"""<VRTDataset rasterXSize="4" rasterYSize="4">
+         |  <SRS>EPSG:28992</SRS>
+         |  <GeoTransform>0, 0.5, 0, 2.0, 0, -0.5</GeoTransform>
+         |  <VRTRasterBand dataType="Float64" band="1">
+         |    <SimpleSource>
+         |      <SourceFilename>$tifDir/member.tif</SourceFilename>
+         |    </SimpleSource>
+         |  </VRTRasterBand>
+         |</VRTDataset>
+         |""".stripMargin)
+    vrt
+  }
+
+  test("a .vrt inside the data roots naming a GeoTIFF outside them is refused") {
+    val inside = java.nio.file.Files.createTempDirectory("graft_wms_roots").toString
+    val outside = java.nio.file.Files.createTempDirectory("graft_wms_out").toString
+    val server = new WmsServer(spark, dataRoots = Seq(inside)).start()
+    try {
+      def getMap(vrt: String): (Int, String) = {
+        val (status, body) = get(s"http://127.0.0.1:${server.boundPort}/wms?" +
+          s"layers=${URLEncoder.encode(referenceFileView(vrt), "UTF-8")}" +
+          "&bbox=0,0,2,2&width=4&height=4&projection=EPSG:28992" +
+          "&time=1970-01-01T00:00:00Z")
+        (status, new String(body, "UTF-8"))
+      }
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$inside/ok"))
+      val (okStatus, okBody) = getMap(mosaic(s"$inside/ok", s"$inside/ok"))
+      assert(okStatus == 200, okBody)
+      val (status, body) = getMap(mosaic(inside, outside))
+      assert(status == 400, body)
+      assert(body.contains(s"'$outside/member.tif' outside the configured data roots"),
+        body)
+    } finally server.stop()
+  }
+
   test("views naming paths outside the data roots are refused") {
     val server = new WmsServer(spark, dataRoots = Seq("/root/testdata")).start()
     try {
@@ -208,6 +256,30 @@ class WmsSpec extends SparkSpec {
         val m = new String(c.getErrorStream.readAllBytes(), "UTF-8")
         assert(m.contains("outside the configured data roots"),
           s"${bad.getClass.getSimpleName}: $m")
+      }
+
+      // reference-dialect RasterFileSource views of every format its
+      // probe dispatches to, written by the engine's own sinks outside
+      // the roots: each is refused before any file is decoded, for a
+      // map window and time the files cover
+      val out = java.nio.file.Files.createTempDirectory("graft_wms_out").toString
+      val req = RasterFixtures.valsRequest
+      val oneFrame = req.copy(stop = req.start)
+      val written = Seq(
+        ZarrSink(source, s"$out/stack.zarr").write(req),
+        Hdf5Sink(source, s"$out/stack.h5").write(req),
+        Hdf5Sink(source, s"$out/hdf5backed.nc").write(req),
+        GribSink(source, s"$out/stack.grib2", degPerCell = 0.05).write(req),
+        GpkgRasterSink(source, s"$out/tiles.gpkg").write(oneFrame),
+        mosaic(out, out))
+      for (path <- written) {
+        val (status, body) = get(s"http://127.0.0.1:${server.boundPort}/wms?" +
+          s"layers=${URLEncoder.encode(referenceFileView(path), "UTF-8")}" +
+          "&bbox=135000,455997,135002,456000&width=4&height=6" +
+          "&projection=EPSG:28992&time=2000-01-01T00:00:00Z")
+        val m = new String(body, "UTF-8")
+        assert(status == 400, s"$path: $m")
+        assert(m.contains("outside the configured data roots"), s"$path: $m")
       }
 
       // an allowed path still renders

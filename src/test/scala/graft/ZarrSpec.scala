@@ -206,6 +206,25 @@ class ZarrSpec extends SparkSpec {
     assert(e2.getMessage.contains("Fortran"))
   }
 
+  test("a store marked only by .zmetadata opens through RasterFileSource " +
+    "and graft-raster alike") {
+    val dir = tmp("graft_zarr_zmeta")
+    val req = RasterFixtures.valsRequest
+    ZarrSink(RasterFixtures.source, s"$dir/stack.zarr").write(req)(spark)
+    // consolidated metadata is the only marker left, under a plain name
+    val store = Paths.get(dir, "plainstore")
+    Files.move(Paths.get(dir, "stack.zarr"), store)
+    Files.delete(store.resolve(".zgroup"))
+    assert(Files.exists(store.resolve(".zmetadata")))
+    val src = RasterFileSource(store.toString)
+    assert(src.isInstanceOf[ZarrSource])
+    assert(src.getData(req)(spark).get.values.map(_.toSeq).toSeq ==
+      RasterFixtures.source.getData(req)(spark).get.values.map(_.toSeq).toSeq)
+    assert(graft.sources.GraftRasterTable.kindOf(store.toString) == "zarr")
+    assert(graft.sources.GraftRasterTable.datasets(Seq(dir)) ==
+      Seq(("zarr", store.toString)))
+  }
+
   // ------------------------------------------------------------ zarr v3
 
   test("Zarr v3 sink round-trip: zstd codec, c/ chunk keys, group doc") {
