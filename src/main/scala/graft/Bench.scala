@@ -149,7 +149,6 @@ object Bench {
       java.nio.file.Paths.get("BENCH_LAST.json"),
       s"""{$summary,"queries":$qs,"errors":$errJson}""")
     catch { case _: Exception => } // read-only cwd must not fail the bench
-    QueryLib.clearCaches()
     spark.stop()
     // LAST stdout line: the compact summary (no per-query map), so a
     // short log tail always ends with one complete JSON object

@@ -56,13 +56,13 @@ object QueryLib {
     def completeCells: Long = n / frames
   }
 
-  private val gridCache =
-    new java.util.concurrent.ConcurrentHashMap[String, EventsGrid]()
+  // per-dir memos, each valid until the table it reads changes (32 dirs)
+  private val grids = new SessionMemo[String, EventsGrid](Tables.MaxEntries)
 
   /** Grid constants derived from the events row count — memoized per dir so
     * a session of raster queries scans the table once, not once per query. */
   def eventsGrid(s: SparkSession, dir: String): EventsGrid =
-    gridCache.computeIfAbsent(dir, _ => {
+    grids(s, dir, Seq(s"$dir/events.parquet")) {
       val n = tbl(s, dir, "events").count()
       val frames = 4
       val cells = (n + frames - 1) / frames
@@ -78,29 +78,20 @@ object QueryLib {
       val w = if (h0 <= 40000) w0
         else (((cells + 39999) / 40000 + 99) / 100 * 100).toInt
       EventsGrid(n, frames, w, ((cells + w - 1) / w).toInt)
-    })
+    }
 
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val pairs = new SessionMemo[String, DataFrame](Tables.MaxEntries,
+    retain = _.localCheckpoint())
 
   /** The shared p06/p16 n-gram Jaccard pair frame (doc_id < 40, n=3),
     * memoized per dir and localCheckpointed so a bench/verify session
     * computes the shingle self-join once — p16's cluster pass then reads
     * the materialized pairs instead of re-running the join. */
   def jaccardPairFrame(s: SparkSession, dir: String): DataFrame =
-    pairCache.computeIfAbsent(dir, _ =>
+    pairs(s, dir, Seq(s"$dir/documents.parquet")) {
       Dedup.jaccardPairs(
         tbl(s, dir, "documents").filter(col("doc_id") < 40), "doc_id", "text", 3)
-        .localCheckpoint())
-
-  /** Drop the per-dir memo frames. The localCheckpoint RDD behind the pair
-    * frame becomes unreachable and the ContextCleaner reclaims its blocks —
-    * harness sessions end anyway, but a long-lived application embedding
-    * the query inventory can release the storage explicitly. */
-  def clearCaches(): Unit = {
-    pairCache.clear()
-    gridCache.clear()
-  }
+    }
 
   def eventsRaster(dir: String, g: EventsGrid, valueExpr: String = "value",
       ndFilter: String = "event_type = 'error'", dtype: String = "float64"): TableRasterSource =

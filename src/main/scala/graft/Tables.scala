@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -9,12 +8,9 @@ import org.apache.spark.sql.types.StructType
   * session and every later read of the unchanged table passes it with
   * `.schema(s)`, so lowering a query starts no footer-scan job.
   *
-  * Memo key, per session (a weak map, [[PerSession]]):
-  *  - the path and its stamp: a file's length and mtime, or for a
-  *    directory the sorted (path, length, mtime) listing of its data files
-  *    (without the `_x` and `.x` names Spark's file index skips), so a
-  *    rewritten table is inferred afresh;
-  *  - the format and the reader options;
+  * The memo is a [[SessionMemo]] over the table's path, so a rewritten
+  * table is inferred afresh; its key is
+  *  - the path, the format and the reader options;
   *  - the session confs that shape the inferred schema: every
   *    `spark.sql.parquet.*`, `spark.sql.legacy.parquet.nanosAsLong`,
   *    `spark.sql.caseSensitive`, and `spark.sql.timestampType` (the type
@@ -38,14 +34,9 @@ object Tables {
   val MaxEntries = 32
 
   private final case class Key(path: String, format: String,
-      options: Map[String, String], confs: Map[String, String],
-      stamp: Seq[(String, Long, Long)])
+      options: Map[String, String], confs: Map[String, String])
 
-  private val memo = new PerSession(() =>
-    new java.util.LinkedHashMap[Key, StructType](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Key, StructType]): Boolean = size() > MaxEntries
-    })
+  private val schemas = new SessionMemo[Key, StructType](MaxEntries)
 
   /** `spark.read.format(format).options(options).load(path)` with the
     * format's inferred schema, inferred at most once per session for the
@@ -56,45 +47,18 @@ object Tables {
     // CSV infers column types only when asked; parquet always does
     def inferred = (if (format == "csv") reader.option("inferSchema", "true")
       else reader).load(path)
-    stamp(spark, path) match {
-      case None => inferred
-      case Some(s) =>
-        val key = Key(path, format, options, shapingConfs(spark), s)
-        val lru = memo(spark)
-        lru.synchronized(Option(lru.get(key))) match {
-          case Some(schema) => reader.schema(schema).load(path)
-          case None =>
-            val df = inferred
-            lru.synchronized(lru.put(key, df.schema))
-            df
-        }
-    }
+    var df: DataFrame = null // the inferring read, when this lookup built
+    val key = Key(path, format, options, shapingConfs(spark))
+    val schema = schemas(spark, key, Seq(path)) { df = inferred; df.schema }
+    if (df != null) df else reader.schema(schema).load(path)
   }
 
   /** Schemas held in `spark`'s memo. */
-  private[graft] def memoSize(spark: SparkSession): Int = {
-    val lru = memo(spark)
-    lru.synchronized(lru.size)
-  }
+  private[graft] def memoSize(spark: SparkSession): Int = schemas.size(spark)
 
   private def shapingConfs(spark: SparkSession): Map[String, String] =
     spark.conf.getAll.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k == "spark.sql.caseSensitive" ||
         k == "spark.sql.legacy.parquet.nanosAsLong" || k == "spark.sql.timestampType"
     }
-
-  private def stamp(spark: SparkSession, path: String)
-      : Option[Seq[(String, Long, Long)]] =
-    try {
-      val p = new Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def dataFiles(s: FileStatus): Seq[FileStatus] =
-        if (!s.isDirectory) Seq(s)
-        else fs.listStatus(s.getPath).toSeq.filterNot { c =>
-          val n = c.getPath.getName
-          (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
-        }.flatMap(dataFiles)
-      Some(dataFiles(fs.getFileStatus(p))
-        .map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).sorted)
-    } catch { case _: java.io.IOException => None }
 }

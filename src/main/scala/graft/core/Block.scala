@@ -282,13 +282,24 @@ object BlockRegistry {
       classOf[AggregateRaster] -> auto(classOf[AggregateRaster], Set(5)),
       classOf[AggregateRasterAboveThreshold] ->
         auto(classOf[AggregateRasterAboveThreshold], Set(5)),
-      classOf[ParseTextColumn] -> (args => parseText(args.updated(2,
-        args(2).asInstanceOf[Seq[Any]].map {
+      classOf[ParseTextColumn] -> (args => parseText(args.updated(2, args(2) match {
+        case triples: Seq[_] => triples.map {
           case Seq(k, c, t) => (k.toString, c.toString, t.toString)
-          case other => other
-        }))),
+          case other => parseTextMapping(other)
+        }
+        case other => parseTextMapping(other)
+      }))),
       classOf[graft.raster.MemorySource] -> graft.raster.MemorySource.fromArgs)
   }
+
+  /** The reference's `{key: column}` key mapping, or any other shape:
+    * the engine's columns have a static type, where the reference
+    * autocasts each cell. */
+  private def parseTextMapping(got: Any): Nothing =
+    throw new IllegalArgumentException("ParseTextColumn key_mapping must be " +
+      "a list of (key, column, type) triples, got " + got + ": a static " +
+      "Spark schema has no per-cell autocast, so each column needs a type " +
+      "(double, boolean or string)")
 
   /** Reference spellings whose arguments differ in shape from the engine
     * constructor's. */

@@ -7,7 +7,7 @@ import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
   * §5.2) and `.zip` shapefile/vector bundles — both everyday currency in
   * the wild, which the reference opens through OGR's /vsizip/ virtual
   * filesystem (geometry/sources.py:18-159 accepts any OGR url). Here the
-  * archive is extracted once per (path, mtime, size) into a temp
+  * archive is extracted once per stamp (path, length, mtime) into a temp
   * directory and the contained dataset dispatches through the normal
   * extension codecs.
   *
@@ -20,8 +20,11 @@ object ZipVector {
     * sink scale documented for the streaming codecs). */
   val MaxInflatedBytes: Long = 8L << 30
 
+  /** Extractions by the archive's stamp (`SessionMemo.stamp`): a
+    * rewritten archive is extracted afresh. JVM-global, as an extracted
+    * directory does not depend on the session. */
   private val extracted =
-    new java.util.concurrent.ConcurrentHashMap[String, Path]()
+    new java.util.concurrent.ConcurrentHashMap[Seq[(String, Long, Long)], Path]()
 
   /** Extract the archive (memoized) and return the primary vector file
     * inside: `.kmz` → the first `.kml` (conventionally doc.kml); `.zip` →
@@ -30,12 +33,10 @@ object ZipVector {
     import graft.io.FileIO
     require(FileIO.exists(url) && !FileIO.isDirectory(url),
       s"no such archive: $url")
-    // memo key: size stands in for mtime on object stores (immutable
-    // objects by convention; local files also carry lastModified)
-    val mtime = if (FileIO.hasScheme(url)) 0L
-      else new java.io.File(url).lastModified
-    val key = s"$url|$mtime|${FileIO.size(url)}"
-    val dir = extracted.computeIfAbsent(key, _ => extract(url))
+    val dir = graft.SessionMemo.stamp(FileIO.conf, Seq(url)) match {
+      case Some(stamp) => extracted.computeIfAbsent(stamp, _ => extract(url))
+      case None => extract(url)
+    }
     val names = Files.list(dir).iterator()
     val all = new scala.collection.mutable.ArrayBuffer[Path]()
     while (names.hasNext) all += names.next()

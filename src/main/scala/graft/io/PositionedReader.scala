@@ -168,11 +168,13 @@ object FileIO {
   private[io] def fsPath(url: String)
       : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
     val p = new org.apache.hadoop.fs.Path(url)
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
     (p.getFileSystem(conf), p)
   }
+
+  private[graft] def conf: org.apache.hadoop.conf.Configuration =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
 
   def exists(url: String): Boolean =
     if (hasScheme(url)) { val (fs, p) = fsPath(url); fs.exists(p) }

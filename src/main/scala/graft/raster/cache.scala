@@ -2,13 +2,17 @@ package graft.raster
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
-import graft.core.Block
+import graft.core.FileSource
 
 /** Token-keyed frame cache (SURVEY §4): the deterministic Block token plus
   * the request identify a tile frame uniquely, so expensive source reshapes
   * (e.g. `TableRasterSource`'s collect_list shuffle) can be persisted once
   * per session and reused by every query over the same source+request —
   * the Spark-native analogue of the reference's `cached` dask graphs.
+  *
+  * A token names paths, not contents: the cache is a [[graft.SessionMemo]]
+  * over the source's `FileSource.paths`, so a frame lives until its files
+  * change, and a stale frame is unpersisted before it is rebuilt.
   *
   * Entries are of two kinds: a table raster's native frame, and the
   * shuffle gathers of `WarpStage` windows that span native tiles. Map-only
@@ -21,58 +25,21 @@ import graft.core.Block
   * replay sets it to time a frame build with no cached entry.
   */
 object FrameCache {
-  private val MaxEntries = 32
-
-  private final case class Key(sessionId: Int, token: String, req: RasterRequest)
-
-  private def safeUnpersist(df: DataFrame): Unit =
-    try df.unpersist(false)
-    catch { case _: Exception => } // session already stopped
-
-  private val cache =
-    new java.util.LinkedHashMap[Key, DataFrame](MaxEntries, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Key, DataFrame]): Boolean = {
-        val evict = size() > MaxEntries
-        if (evict) safeUnpersist(e.getValue)
-        evict
-      }
-    }
+  private val frames = new graft.SessionMemo[(String, RasterRequest), DataFrame](32,
+    _.persist(StorageLevel.MEMORY_AND_DISK),
+    df => try df.unpersist(false) catch { case _: Exception => }) // session stopped
 
   private def enabled(spark: SparkSession): Boolean =
     spark.conf.getOption("spark.graft.frameCache").forall(_.toBoolean)
 
   // observability hooks (specs assert containment hits; cheap enough to
   // keep on unconditionally)
-  private[graft] val hitCount = new java.util.concurrent.atomic.AtomicLong
-  private[graft] val missCount = new java.util.concurrent.atomic.AtomicLong
+  private[graft] def hitCount: java.util.concurrent.atomic.AtomicLong = frames.hits
+  private[graft] def missCount: java.util.concurrent.atomic.AtomicLong = frames.misses
 
   /** Return the persisted frame for (block, req), building it on miss. */
-  def cached(block: Block, req: RasterRequest)(build: => DataFrame)(
-      implicit spark: SparkSession): DataFrame = {
+  def cached(block: FileSource, req: RasterRequest)(build: => DataFrame)(
+      implicit spark: SparkSession): DataFrame =
     if (!enabled(spark)) build
-    else {
-      val k = Key(System.identityHashCode(spark), block.token, req)
-      cache.synchronized {
-        val hit = cache.get(k)
-        // never serve a frame bound to a stopped session (identity-hash
-        // reuse after GC could otherwise alias a dead session's entry)
-        if (hit != null && !hit.sparkSession.sparkContext.isStopped) {
-          hitCount.incrementAndGet(); hit
-        } else {
-          if (hit != null) cache.remove(k)
-          missCount.incrementAndGet()
-          val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-          cache.put(k, df)
-          df
-        }
-      }
-    }
-  }
-
-  /** Drop and unpersist everything (test hygiene). */
-  def clear(): Unit = cache.synchronized {
-    val it = cache.values().iterator()
-    while (it.hasNext) { safeUnpersist(it.next()); it.remove() }
-  }
+    else frames(spark, (block.token, req), block.paths)(build)
 }

@@ -234,13 +234,27 @@ class WmsServer(spark: SparkSession, port: Int = 0,
   /** Deserialized views name arbitrary filesystem paths in their source
     * blocks; refuse any `FileSource` path outside the configured data
     * roots so an HTTP client cannot read and render arbitrary
-    * process-readable files. */
+    * process-readable files. Each path is resolved the ways the codecs open
+    * it: as a Hadoop `Path` (which drops `..` lexically; a scheme other
+    * than `file` is refused) and, when bare, as the `java.nio` path the OS
+    * resolves. Symlinks are resolved, the roots' too: the real path of the
+    * nearest existing ancestor, then the rest. */
   private def validateSourcePaths(view: graft.core.Block): Unit = {
-    val roots = dataRoots.map(r =>
-      java.nio.file.Paths.get(r).toAbsolutePath.normalize)
+    def real(p: java.nio.file.Path): java.nio.file.Path = {
+      val abs = p.toAbsolutePath
+      Iterator.iterate(abs)(_.getParent).takeWhile(_ != null)
+        .find(java.nio.file.Files.exists(_)).fold(abs.normalize) { e =>
+          if (e == abs) e.toRealPath()
+          else e.toRealPath().resolve(abs.subpath(e.getNameCount, abs.getNameCount)).normalize
+        }
+    }
+    val roots = dataRoots.map(r => real(java.nio.file.Paths.get(r)))
     def check(p: String): Unit = {
-      val abs = java.nio.file.Paths.get(p).toAbsolutePath.normalize
-      require(roots.exists(abs.startsWith),
+      val uri = new org.apache.hadoop.fs.Path(p).toUri
+      require(uri.getScheme == null || uri.getScheme == "file",
+        s"source path '$p' has scheme '${uri.getScheme}': outside the configured data roots")
+      val opened = uri.getPath +: (if (uri.getScheme == null) Seq(p) else Nil)
+      require(opened.forall(o => roots.exists(real(java.nio.file.Paths.get(o)).startsWith)),
         s"source path '$p' outside the configured data roots")
     }
     def walk(b: graft.core.Block): Unit = {

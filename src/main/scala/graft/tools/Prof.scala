@@ -150,9 +150,6 @@ object Prof {
             perturbDocs = rest.contains("neardup"))
         case other => sys.error(s"$usage (got ${other.mkString(" ")})")
       }
-    } finally {
-      graft.QueryLib.clearCaches()
-      spark.stop()
-    }
+    } finally spark.stop()
   }
 }

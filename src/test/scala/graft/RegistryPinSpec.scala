@@ -176,4 +176,14 @@ class RegistryPinSpec extends AnyFunSuite {
       }
     assert(failures.flatten.isEmpty, failures.flatten.mkString("\n"))
   }
+
+  test("a reference ParseTextColumn with a {key: column} mapping is a client error") {
+    // the reference's key_mapping maps keys to columns and autocasts each
+    // cell; the engine needs a type per column
+    val e = intercept[IllegalArgumentException](BlockRegistry.fromJson(view(List(
+      ref("geometry.text.ParseTextColumn"), geometry.graphName, "x",
+      Map("k" -> "k_val"), " ", "="))))
+    assert(e.getMessage.contains("(key, column, type) triples"), e.getMessage)
+    assert(e.getMessage.contains("no per-cell autocast"), e.getMessage)
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.time.Instant
+import org.apache.spark.sql.SparkSession
 import graft.raster._
 
 /** Cross-CRS and off-grid requests against the distributed table source:
@@ -49,7 +50,8 @@ class WarpSpec extends SparkSpec {
   // two native tiles across: 256 + 44 columns
   private lazy val wide = fixture(300, 4)
 
-  private def compare(req: RasterRequest, f: Fixture = small): Unit = {
+  private def compare(req: RasterRequest, f: Fixture = small)(
+      implicit spark: SparkSession): Unit = {
     val got = f.table.getData(req).get
     val want = f.golden.getData(req).get
     assert(got.times == want.times)
@@ -161,7 +163,7 @@ class WarpSpec extends SparkSpec {
   }
 
   test("overlapping warped time sub-ranges reuse one cached gather") {
-    FrameCache.clear()
+    implicit val spark: SparkSession = coldSession()
     // a window across the two native tiles of the wide grid → the gather;
     // two single-frame requests over the SAME spatial window must share
     // one full-period gather (window containment in time): the second is a
@@ -184,9 +186,13 @@ class WarpSpec extends SparkSpec {
     assert(FrameCache.missCount.get() == m1, "second native sub-range rebuilt the reshape")
   }
 
+  /** A new session of the shared context: its FrameCache is empty. */
+  private def coldSession(): SparkSession = TestSpark.spark.newSession()
+
   /** `b` over `req`, the FrameCache misses the request added, the Spark
     * jobs it started and the shuffle bytes they wrote. */
-  private def served(b: RasterBlock, req: RasterRequest): (RasterResult, Long, Int, Long) = {
+  private def served(b: RasterBlock, req: RasterRequest)(
+      implicit spark: SparkSession): (RasterResult, Long, Int, Long) = {
     val m0 = FrameCache.missCount.get()
     val (res, jobs, shuffle) = sparkWork(b.getData(req).get)
     (res, FrameCache.missCount.get() - m0, jobs, shuffle)
@@ -211,7 +217,7 @@ class WarpSpec extends SparkSpec {
     Some(Instant.ofEpochMilli(T0)), Some(Instant.ofEpochMilli(T0 + Hour)))
 
   test("a window inside one native tile is one narrow job over the cached native frame") {
-    FrameCache.clear()
+    implicit val spark: SparkSession = coldSession()
     val (full, mFull, _, _) = served(table, req(Bbox(0, 0, gw, gh), gw, gh))
     assert(mFull == 1, "the native frame is one entry")
     // a window hanging off the top-right grid corner: nodata outside
@@ -238,7 +244,7 @@ class WarpSpec extends SparkSpec {
   }
 
   test("a window across native tiles takes the cached gather and matches MemorySource") {
-    FrameCache.clear()
+    implicit val spark: SparkSession = coldSession()
     val (_, mNat, _, _) = served(wide.table, req(Bbox(0, 0, 300, 4), 300, 4))
     assert(mNat == 1, "the native frame is one entry")
     // straddles x = 256: its one output tile samples both native tiles

@@ -223,6 +223,60 @@ class WmsSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  /** A 4×4 GeoTIFF over (0, 0, 2, 2) in EPSG:28992, written into `dir`. */
+  private def tinyTif(dir: String): String = {
+    val tif = s"$dir/x.tif"
+    GeoTiff.write(tif, Array.tabulate(16)(_.toDouble), 4, 4, Bbox(0, 0, 2, 2),
+      28992, -9999.0, "float64")
+    tif
+  }
+
+  /** The status and body of a GetMap of `GeoTiffSource(url)` over its
+    * 4×4 grid. */
+  private def getTif(server: WmsServer, url: String): (Int, String) = {
+    val (status, body) = get(s"http://127.0.0.1:${server.boundPort}/wms?" +
+      s"layers=${URLEncoder.encode(GeoTiffSource(url).toJson, "UTF-8")}" +
+      "&bbox=0,0,2,2&width=4&height=4&projection=EPSG:28992" +
+      "&time=1970-01-01T00:00:00Z")
+    (status, new String(body, "UTF-8"))
+  }
+
+  test("a file:// url is confined as the file it names, and other schemes are refused") {
+    // the working directory is a data root: a scheme-qualified url must not
+    // pass as a path relative to it
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath.toString
+    val outside = tinyTif(java.nio.file.Files.createTempDirectory("graft_wms_out").toString)
+    val server = new WmsServer(spark, dataRoots = Seq(cwd)).start()
+    try {
+      for (url <- Seq(outside, s"file://$outside", "s3a://bucket/x.tif")) {
+        val (status, body) = getTif(server, url)
+        assert(status == 400, s"$url: $body")
+        assert(body.contains("outside the configured data roots"), s"$url: $body")
+      }
+    } finally server.stop()
+  }
+
+  test("a symlink inside the data roots to a file outside them is refused") {
+    val inside = java.nio.file.Files.createTempDirectory("graft_wms_roots").toString
+    val outside = tinyTif(java.nio.file.Files.createTempDirectory("graft_wms_out").toString)
+    val link = java.nio.file.Files.createSymbolicLink(
+      java.nio.file.Paths.get(s"$inside/link.tif"), java.nio.file.Paths.get(outside))
+    // a `..` after a linked directory climbs from the link's target
+    val outDir = java.nio.file.Paths.get(outside).getParent
+    val sub = java.nio.file.Files.createDirectory(outDir.resolve("sub"))
+    java.nio.file.Files.createSymbolicLink(java.nio.file.Paths.get(s"$inside/dir"), sub)
+    val server = new WmsServer(spark, dataRoots = Seq(inside)).start()
+    try {
+      val (okStatus, okBody) = getTif(server, tinyTif(inside))
+      assert(okStatus == 200, okBody)
+      for (url <- Seq(link.toString, s"$inside/dir/../x.tif")) {
+        val (status, body) = getTif(server, url)
+        assert(status == 400, s"$url: $body")
+        assert(body.contains("outside the configured data roots"), s"$url: $body")
+      }
+    } finally server.stop()
+  }
+
   test("views naming paths outside the data roots are refused") {
     val server = new WmsServer(spark, dataRoots = Seq("/root/testdata")).start()
     try {
@@ -366,32 +420,32 @@ class WmsSpec extends SparkSpec {
   test("concurrent GetMaps on the request pool match the same requests served alone") {
     val view = tableRaster(40, 30, 2)
     val layers = URLEncoder.encode(view.toJson, "UTF-8")
-    val server = new WmsServer(spark).start()
+    // each side serves from a new session: its FrameCache starts empty
+    val server = new WmsServer(spark.newSession()).start()
     val prefix = s"graft-wms-${server.boundPort}-"
     def poolThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
       .filter(_.getName.startsWith(prefix))
     // 8 distinct 8x8 windows, frame 1 of 2
-    val urls = for (k <- 0 until 8) yield {
+    def urls(port: Int) = for (k <- 0 until 8) yield {
       val (x, y) = (4 * k, (3 * k) % 22)
-      s"http://127.0.0.1:${server.boundPort}/wms?layers=$layers" +
+      s"http://127.0.0.1:$port/wms?layers=$layers" +
         s"&bbox=$x,$y,${x + 8},${y + 8}&width=8&height=8&projection=EPSG:28992" +
         "&time=1970-01-01T01:00:00Z&vmin=0&vmax=2200&styles=viridis"
     }
     val threads = try {
-      FrameCache.clear()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(urls.size)
-      val together = try urls.map(u => pool.submit(() => get(u))).map(_.get())
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      val together = try urls(server.boundPort).map(u => pool.submit(() => get(u))).map(_.get())
         finally pool.shutdown()
       val threads = poolThreads
       assert(threads.nonEmpty, "requests ran off the server's pool")
-      FrameCache.clear()
-      val alone = urls.map(get)
+      val cold = new WmsServer(spark.newSession()).start()
+      val alone = try urls(cold.boundPort).map(get) finally cold.stop()
       for (((s1, b1), (s2, b2)) <- together.zip(alone)) {
         assert(s1 == 200 && s2 == 200, new String(b1, "UTF-8"))
         assert(b1.sameElements(b2), "a concurrent tile differs from the same tile alone")
       }
       // the tiles differ from one another: each saw its own window
-      assert(alone.map(_._2.toSeq).distinct.size == urls.size)
+      assert(alone.map(_._2.toSeq).distinct.size == 8)
       threads
     } finally server.stop()
     threads.foreach(_.join(10000))

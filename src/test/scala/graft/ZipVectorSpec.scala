@@ -92,4 +92,31 @@ class ZipVectorSpec extends SparkSpec {
       GeometryFileSource(empty).frame(GeometryRequest()))
     assert(e.getMessage.contains("no recognized vector dataset"))
   }
+
+  test("a rewritten scheme-qualified zip of the same size is extracted afresh") {
+    val zip = tmp("zipstamp", "v.zip")
+    /** `zip` holding one stored (uncompressed) `data.geojson`, last
+      * modified at `mtime`: equal-length texts give equal-size archives. */
+    def write(text: String, mtime: Long): Unit = {
+      val bytes = text.getBytes("UTF-8")
+      val e = new java.util.zip.ZipEntry("data.geojson")
+      e.setMethod(java.util.zip.ZipEntry.STORED)
+      e.setTime(0L)
+      e.setSize(bytes.length); e.setCompressedSize(bytes.length)
+      val crc = new java.util.zip.CRC32; crc.update(bytes); e.setCrc(crc.getValue)
+      val zout = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(zip))
+      try { zout.putNextEntry(e); zout.write(bytes); zout.closeEntry() }
+      finally zout.close()
+      java.nio.file.Files.setLastModifiedTime(java.nio.file.Paths.get(zip),
+        java.nio.file.attribute.FileTime.fromMillis(mtime))
+    }
+    def extracted = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(ZipVector.primaryFile(s"file://$zip")))
+    write("""{"v": 1.5}""", 1600000000000L)
+    val size = java.nio.file.Files.size(java.nio.file.Paths.get(zip))
+    assert(extracted == """{"v": 1.5}""")
+    write("""{"v": 2.5}""", 1600000060000L)
+    assert(java.nio.file.Files.size(java.nio.file.Paths.get(zip)) == size)
+    assert(extracted == """{"v": 2.5}""")
+  }
 }
