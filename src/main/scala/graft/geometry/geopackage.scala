@@ -460,39 +460,21 @@ case class GeoPackageSource(url: String, table: Option[String] = None)
 }
 
 /** The reference's `GeometryFileSource(url, layer, id_field)` opens any OGR
-  * vector format by url (geometry/sources.py:18-159). Here the format
-  * dispatches on the extension to the engine's pure-JVM codecs:
-  * `.shp` → [[ShapefileSource]], `.gpkg` → [[GeoPackageSource]] (`layer`
-  * selects the feature table), `.geojson`/`.json`/`.ndjson` →
-  * [[GeoJsonSource]], anything else (directories, `.parquet`) →
-  * [[GeoParquetSource]]. `proj` is the fallback CRS for formats that do not
-  * carry one; when given it is honored for EVERY format — including geojson,
-  * where it overrides the RFC 7946 default of EPSG:4326 (legacy files this
-  * engine wrote before the sink reprojected carry native-CRS coordinates and
-  * must not be relabeled WGS84).
+  * vector format by url (geometry/sources.py:18-159). Here the url's
+  * extension picks a row of [[VectorFormat]] (`layer` selects a GeoPackage
+  * feature table or a GPX layer), a `.zip` bundle reads the dataset inside
+  * it, and anything else (directories, `.parquet`) is a [[GeoParquetSource]].
+  * `proj` is the fallback CRS for formats that do not carry one; when given
+  * it is honored for EVERY format that takes one — including geojson, where
+  * it overrides the RFC 7946 default of EPSG:4326 (legacy files this engine
+  * wrote before the sink reprojected carry native-CRS coordinates and must
+  * not be relabeled WGS84).
   */
 case class GeometryFileSource(url: String, layer: Option[String] = None,
     proj: Option[String] = None) extends GeometryBlock with graft.core.FileSource {
 
-  @transient private lazy val delegate: GeometryBlock = {
-    val lower = url.toLowerCase
-    val fallback = proj.getOrElse("EPSG:28992")
-    if (lower.endsWith(".kmz") || lower.endsWith(".zip"))
-      GeometryFileSource(ZipVector.primaryFile(url), layer, proj)
-    else if (lower.endsWith(".shp")) ShapefileSource(url, fallback)
-    else if (lower.endsWith(".gpkg")) GeoPackageSource(url, layer)
-    else if (lower.endsWith(".gml")) GmlSource(url, fallback)
-    else if (lower.endsWith(".fgb")) FlatGeobufSource(url, fallback)
-    else if (lower.endsWith(".csv")) CsvWktSource(url, proj.getOrElse("EPSG:4326"))
-    else if (lower.endsWith(".kml")) KmlSource(url)
-    else if (lower.endsWith(".gpx")) GpxSource(url, layer.getOrElse("waypoints"))
-    else if (lower.endsWith(".mif")) MifSource(url, proj.getOrElse(""))
-    else if (lower.endsWith(".tab")) TabSource(url, proj.getOrElse(""))
-    else if (lower.endsWith(".dxf")) DxfSource(url, proj.getOrElse(""))
-    else if (lower.endsWith(".geojson") || lower.endsWith(".json") ||
-      lower.endsWith(".ndjson")) GeoJsonSource(url, proj.getOrElse("EPSG:4326"))
-    else GeoParquetSource(url, fallback)
-  }
+  @transient private lazy val delegate: GeometryBlock =
+    VectorFormat.open(url, layer, proj)
 
   override def columns: Set[String] = delegate.columns
   override def projection: String = delegate.projection

@@ -321,10 +321,8 @@ object SqliteWrite {
   * `gpkg_contents`, `gpkg_geometry_columns`, and one feature table whose
   * geometries are GPB blobs (GeoPackage spec §2.1.3) around JTS WKB.
   *
-  * Like [[ShapefileSink]], gpkg is a single-writer format: the frame is
-  * collected under the geometry request guard (raises past the cap, never
-  * silently truncates). Unbounded exports belong in the partitioned
-  * geoparquet sink.
+  * The `.gpkg` row of [[VectorFormat]]; gpkg is a single-writer format,
+  * so the frame streams through the driver in fid order.
   */
 object GeoPackageSink {
 
@@ -447,61 +445,9 @@ object GeoPackageSink {
       SqliteWrite.Table(tableName, featSql, featRows))
   }
 
-  def write(source: GeometryBlock, gpkgPath: String, req: GeometryRequest,
-      table: Option[String] = None)(implicit spark: SparkSession): String = {
-    val df = source.frame(req)
-    require(df.columns.contains("geometry"), "gpkg export needs a geometry column")
-    val tableName = tableNameFor(gpkgPath, table)
-    val rows = {
-      val cap = graft.raster.RequestGuards.geometryLimit
-      val limited = req.limit.isDefined
-      val collected = (if (limited) df else df.limit(cap + 1)).collect()
-      if (!limited && collected.length > cap) throw new RuntimeException(
-        s"The amount of returned geometries exceeded the maximum of $cap geometries.")
-      collected
-    }
-    val (srsId, _) = srsOf(source.projection)
-    val geomIdx = df.columns.indexOf("geometry")
-    val hasFid = df.columns.contains("fid")
-    val fidIdx = df.columns.indexOf("fid")
-    val attrCols = df.columns.zipWithIndex
-      .filter { case (c, _) => c != "geometry" && c != "fid" }
-    // feature rows: rowid = fid (or 1..n), record = (NULL ipk, gpb, attrs…)
-    var minX = Double.PositiveInfinity; var minY = Double.PositiveInfinity
-    var maxX = Double.NegativeInfinity; var maxY = Double.NegativeInfinity
-    val typeNames = scala.collection.mutable.Set[String]()
-    val featRows = rows.zipWithIndex.map { case (r, i) =>
-      val rid = if (hasFid) r.get(fidIdx) match {
-        case l: java.lang.Long => l.longValue
-        case x: java.lang.Integer => x.longValue
-        case _ => i + 1L
-      } else i + 1L
-      val wkb = r.get(geomIdx).asInstanceOf[Array[Byte]]
-      val blob = if (wkb == null) null else {
-        val g = GeomFunctions.readWkb(wkb)
-        val e = g.getEnvelopeInternal
-        minX = math.min(minX, e.getMinX); minY = math.min(minY, e.getMinY)
-        maxX = math.max(maxX, e.getMaxX); maxY = math.max(maxY, e.getMaxY)
-        typeNames += g.getGeometryType.toUpperCase
-        gpb(wkb, srsId)
-      }
-      (rid, null +: blob +: attrCols.map { case (_, ai) => coerce(r.get(ai)) }.toSeq)
-    }.toSeq
-    val geomType = if (typeNames.size == 1) typeNames.head else "GEOMETRY"
-    val tables = buildTables(tableName, source.projection,
-      attrCols.map { case (c, _) => (c, df.schema(c).dataType) }.toSeq, geomType,
-      if (typeNames.nonEmpty) Some((minX, minY, maxX, maxY)) else None,
-      featRows.sortBy(_._1).iterator)
-    new java.io.File(gpkgPath).delete()
-    // application_id "GPKG", user_version 1.3.0 (GeoPackage spec §1.1.1.1.1)
-    SqliteWrite.writeDb(gpkgPath, tables,
-      applicationId = 0x47504B47, userVersion = 10300)
-    gpkgPath
-  }
-
-  /** Unbounded streaming export, no geometry-limit guard: one distributed
-    * metadata pass (envelope, geometry types, fid usability), then a
-    * fid-sorted `toLocalIterator` feeds the page builder — driver memory is
+  /** Unbounded streaming export: one distributed metadata pass (envelope,
+    * geometry types, fid usability), then a fid-sorted `toLocalIterator`
+    * feeds the page builder — driver memory is
     * bounded by one Spark partition plus the page buffer. The reference
     * exports unbounded totals the same way: per-tile files appended through
     * one OGR handle (sinks.py:224-284, merge_files :116-169); here the tile

@@ -399,12 +399,10 @@ object Gml {
   }
 }
 
-/** Single-file GML writer. Like [[ShapefileSink]], a GML document is a
-  * single sequential XML stream, so the frame funnels through the driver
-  * under the global geometry-limit guard (raises, never silently truncates
-  * — the reference funnels gml through one OGR dataset handle the same
-  * way, geometry/sinks.py:128-154). Unbounded exports belong in
-  * geoparquet. */
+/** Single-file GML writer, the `.gml` row of [[VectorFormat]]. A GML
+  * document is a single sequential XML stream, so the frame funnels through
+  * the driver in fid order (the reference funnels gml through one OGR
+  * dataset handle the same way, geometry/sinks.py:128-154). */
 object GmlSink {
 
   private def docHead(gmlPath: String,
@@ -451,9 +449,9 @@ object GmlSink {
     sb.toString
   }
 
-  /** Unbounded streaming export, no geometry-limit guard: a distributed
-    * envelope pass fills `gml:boundedBy` up front, then a fid-sorted
-    * `toLocalIterator` appends one member at a time — driver memory is
+  /** Unbounded streaming export: a distributed envelope pass fills
+    * `gml:boundedBy` up front, then a fid-sorted `toLocalIterator` appends
+    * one member at a time — driver memory is
     * bounded by one Spark partition. The engine analogue of the reference's
     * tiled to_file + merge_files (sinks.py:224-284, :116-169). */
   def writeStream(df: DataFrame, proj: String, gmlPath: String)
@@ -489,62 +487,6 @@ object GmlSink {
     val fields = attrCols.zip(outNames).map { case (c, n) =>
       (n, Gml.xsdType(df.schema(c).dataType))
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get(Gml.xsdPathFor(gmlPath)),
-      Gml.xsdFor(layer, fields).getBytes("UTF-8"))
-    gmlPath
-  }
-
-  def write(source: GeometryBlock, gmlPath: String, req: GeometryRequest)
-      (implicit spark: SparkSession): String = {
-    val df = source.frame(req)
-    require(df.columns.contains("geometry"), "GML export needs a geometry column")
-    val attrCols = df.columns.filterNot(c => c == "geometry" || c == "fid").toSeq
-    // element names sanitized in lockstep for the document AND the xsd
-    val outNames = Gml.fieldNamesFor(attrCols)
-    val rows = {
-      val cap = graft.raster.RequestGuards.geometryLimit
-      val limited = req.limit.isDefined
-      val collected = (if (limited) df else df.limit(cap + 1)).collect()
-      if (!limited && collected.length > cap) throw new RuntimeException(
-        s"The amount of returned geometries exceeded the maximum of $cap geometries.")
-      collected
-    }
-    val layer = Gml.layerNameFor(gmlPath)
-    val fidIdx = df.columns.indexOf("fid")
-    val geomIdx = df.columns.indexOf("geometry")
-    val attrIdx = attrCols.map(df.columns.indexOf(_))
-    val srs = source.projection
-
-    // document bbox for gml:boundedBy
-    var minX = Double.PositiveInfinity; var minY = Double.PositiveInfinity
-    var maxX = Double.NegativeInfinity; var maxY = Double.NegativeInfinity
-    val geoms = rows.map { r =>
-      val wkb = if (geomIdx >= 0) r.get(geomIdx).asInstanceOf[Array[Byte]] else null
-      if (wkb == null) null else {
-        val g = GeomFunctions.readWkb(wkb)
-        val e = g.getEnvelopeInternal
-        if (e.getMinX < minX) minX = e.getMinX
-        if (e.getMinY < minY) minY = e.getMinY
-        if (e.getMaxX > maxX) maxX = e.getMaxX
-        if (e.getMaxY > maxY) maxY = e.getMaxY
-        g
-      }
-    }
-
-    val sb = new StringBuilder(1 << 20)
-    sb.append(docHead(gmlPath,
-      if (minX.isFinite) Some((minX, minY, maxX, maxY)) else None))
-    rows.zip(geoms).foreach { case (r, g) =>
-      val fid = if (fidIdx >= 0 && !r.isNullAt(fidIdx)) Gml.fidValue(r.get(fidIdx)) else -1L
-      sb.append(memberXml(layer, fid, g, srs, outNames, attrIdx.map(i => r.get(i))))
-    }
-    sb.append("</ogr:FeatureCollection>\n")
-
-    val fields = attrCols.zip(outNames).map { case (c, n) =>
-      (n, Gml.xsdType(df.schema(c).dataType))
-    }
-    java.nio.file.Files.write(java.nio.file.Paths.get(gmlPath),
-      sb.toString.getBytes("UTF-8"))
     java.nio.file.Files.write(java.nio.file.Paths.get(Gml.xsdPathFor(gmlPath)),
       Gml.xsdFor(layer, fields).getBytes("UTF-8"))
     gmlPath

@@ -54,12 +54,7 @@ trait GeometryBlock extends Block {
     val df = frameInRequestCrs(req)
     req.limit match {
       case Some(_) => df.collect().toSeq // frame already applied the limit
-      case None =>
-        val cap = graft.raster.RequestGuards.geometryLimit
-        val rows = df.limit(cap + 1).collect()
-        if (rows.length > cap) throw new RuntimeException(
-          s"The amount of returned geometries exceeded the maximum of $cap geometries.")
-        rows.toSeq
+      case None => graft.raster.RequestGuards.collectGeometries(df).toSeq
     }
   }
 

@@ -426,36 +426,6 @@ object Shapefile {
     w.close()
   }
 
-  /** DBF fields for a Spark schema (geometry/fid excluded by the caller).
-    * String widths are sized from the data, which the driver-side writer has
-    * in hand — DBF is fixed-width, there is no streaming-safe alternative. */
-  def dbfFieldsFor(schema: Seq[(String, DataType)],
-      rows: Seq[Seq[Any]]): Seq[DbfField] = {
-    val fields = schema.zipWithIndex.map { case ((name, dt), i) =>
-      val short = name.take(10)
-      dt match {
-        case LongType | IntegerType | ShortType | ByteType =>
-          DbfField(short, 'N', 18, 0)
-        case DoubleType | FloatType =>
-          DbfField(short, 'N', 24, 15)
-        case BooleanType => DbfField(short, 'L', 1, 0)
-        case DateType => DbfField(short, 'D', 8, 0)
-        case _ =>
-          val w = rows.iterator.map { r =>
-            r(i) match {
-              case null => 0
-              case s => s.toString.getBytes(StandardCharsets.ISO_8859_1).length
-            }
-          }.foldLeft(1)(math.max)
-          DbfField(short, 'C', math.min(254, w), 0)
-      }
-    }
-    val dup = fields.groupBy(_.name).collectFirst { case (n, fs) if fs.size > 1 => n }
-    dup.foreach(n => throw new IllegalArgumentException(
-      s"field name '$n' collides after the DBF 10-char truncation"))
-    fields
-  }
-
   private def formatNumeric(v: Any, f: DbfField): String = {
     val s = v match {
       case null => ""
@@ -628,34 +598,37 @@ case class ShapefileSource(url: String, proj: String = "EPSG:28992")
   }
 }
 
-/** Shapefile export of a GeometryBlock, after the reference's `to_file`
-  * with a `.shp` target (geometry/sinks.py:224-284). A shapefile is one
-  * single-writer file set, so the write collects through the same
-  * geometry-limit guard as `getFeatures`; unbounded exports belong in
-  * partitioned geoparquet. The reference has the same shape: its dask
-  * workers write per-tile files that a single merge folds together.
+/** Shapefile export of a frame, after the reference's `to_file` with a
+  * `.shp` target (geometry/sinks.py:224-284); the `.shp` row of
+  * [[VectorFormat]].
   */
 object ShapefileSink {
 
-  /** Unbounded streaming export, no geometry-limit guard: one distributed
-    * pass sizes the fixed-width DBF string fields, then a fid-sorted
-    * `toLocalIterator` appends records one at a time — driver memory is
-    * bounded by one Spark partition. This is the engine's analogue of the
-    * reference's tiled to_file + merge_files (sinks.py:224-284, :116-169). */
-  def writeStream(df: DataFrame, proj: String, shpPath: String)
+  /** Unbounded streaming export: one distributed pass sizes the fixed-width
+    * DBF string fields, then a fid-sorted `toLocalIterator` appends records
+    * one at a time — driver memory is bounded by one Spark partition. This
+    * is the engine's analogue of the reference's tiled to_file +
+    * merge_files (sinks.py:224-284, :116-169). A `C` field holds Spark's
+    * string cast of its value, so the width pass and the record writer
+    * measure the same text. */
+  def writeStream(df0: DataFrame, proj: String, shpPath: String)
       (implicit spark: SparkSession): String = {
-    require(df.columns.contains("geometry"), "shapefile export needs a geometry column")
-    val attrCols = df.columns.filterNot(_ == "geometry").toSeq
-    val schema = attrCols.map(c => (c, df.schema(c).dataType))
-    // distributed width pass for C (string) fields — DBF is fixed-width
+    require(df0.columns.contains("geometry"), "shapefile export needs a geometry column")
+    val attrCols = df0.columns.filterNot(_ == "geometry").toSeq
+    val schema = attrCols.map(c => (c, df0.schema(c).dataType))
     val strCols = schema.collect {
       case (c, dt) if !Set[DataType](LongType, IntegerType, ShortType, ByteType,
         DoubleType, FloatType, BooleanType, DateType).contains(dt) => c
     }
+    // quoted: a column name may hold dots
+    def q(c: String) = col("`" + c.replace("`", "``") + "`")
+    val df = df0.select(df0.columns.toIndexedSeq.map(c =>
+      if (strCols.contains(c)) q(c).cast("string").as(c) else q(c)): _*)
+    // distributed width pass for C (string) fields — DBF is fixed-width
     val widths: Map[String, Int] =
       if (strCols.isEmpty) Map.empty
       else {
-        val aggs = strCols.map(c => max(length(col(c).cast("string"))).as(c))
+        val aggs = strCols.map(c => max(length(q(c))).as(c))
         val r = df.agg(aggs.head, aggs.tail: _*).head()
         strCols.zipWithIndex.map { case (c, i) =>
           c -> (if (r.isNullAt(i)) 1 else math.max(1, r.getInt(i)))
@@ -687,32 +660,6 @@ object ShapefileSink {
       w.append(g, attrIdx.map(i => r.get(i)))
     }
     w.close()
-    shpPath
-  }
-
-  def write(source: GeometryBlock, shpPath: String, req: GeometryRequest)
-      (implicit spark: SparkSession): String = {
-    val df = source.frame(req)
-    require(df.columns.contains("geometry"), "shapefile export needs a geometry column")
-    val attrCols = df.columns.filterNot(_ == "geometry").toSeq
-    val rows = {
-      val cap = graft.raster.RequestGuards.geometryLimit
-      val limited = req.limit.isDefined
-      val collected = (if (limited) df else df.limit(cap + 1)).collect()
-      if (!limited && collected.length > cap) throw new RuntimeException(
-        s"The amount of returned geometries exceeded the maximum of $cap geometries.")
-      collected
-    }
-    val schema = attrCols.map(c => (c, df.schema(c).dataType))
-    val geomIdx = df.columns.indexOf("geometry")
-    val attrIdx = attrCols.map(df.columns.indexOf(_))
-    val attrRows = rows.map(r => attrIdx.map(i => r.get(i)).toSeq).toSeq
-    val fields = Shapefile.dbfFieldsFor(schema, attrRows)
-    val geoms = rows.map { r =>
-      val wkb = r.get(geomIdx).asInstanceOf[Array[Byte]]
-      if (wkb == null) null else GeomFunctions.readWkb(wkb)
-    }
-    Shapefile.write(shpPath, geoms.zip(attrRows).toSeq, fields, source.projection)
     shpPath
   }
 }

@@ -49,40 +49,34 @@ object SinkFunnel {
 
 case class GeometryFileSink(source: GeometryBlock, url: String,
     format: String = "geoparquet", fields: Option[Seq[String]] = None) {
-  require(Set("geoparquet", "geojson", "shp", "gpkg", "gml", "fgb", "csv",
-    "kml", "gpx", "mif", "dxf", "tab").contains(format), s"unsupported format $format")
+  /** The single-file format this sink writes one tile per request in;
+    * None for the partitioned "geoparquet" and "geojson" directory writes. */
+  private def tile: Option[VectorFormat] =
+    if (format == "geojson") None else VectorFormat.named(format)
+  require(tile.isDefined || format == "geoparquet" || format == "geojson",
+    s"unsupported format $format")
 
-  def write(req: GeometryRequest)(implicit spark: SparkSession): String = {
+  def write(req: GeometryRequest)(implicit spark: SparkSession): String =
+    tile.fold(writePartitioned(req))(writeTile(_, req))
+
+  private def writeTile(f: VectorFormat, req: GeometryRequest)
+      (implicit spark: SparkSession): String = {
     // single-file OGR-style formats follow the reference's tile contract:
     // one <requesthash>.<ext> file per request into the directory, merged
     // later by mergeFiles (sinks.py:116-169)
-    if (Set("shp", "gpkg", "gml", "fgb", "csv", "kml", "gpx", "mif",
-        "dxf", "tab").contains(format)) {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(url))
-      val hash = java.security.MessageDigest.getInstance("MD5")
-        .digest(req.toString.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(7)
-      val out = s"$url/$hash.$format"
-      val src = fields match {
-        case Some(cols) => ProjectedGeometryBlock(source, cols.toSet + "geometry")
-        case None       => source
-      }
-      format match {
-        case "shp"  => ShapefileSink.write(src, out, req)
-        case "gpkg" => GeoPackageSink.write(src, out, req)
-        case "gml"  => GmlSink.write(src, out, req)
-        // the newer codecs only have the streaming writers — strictly
-        // more capable than the guarded tile write
-        case "fgb"  => FlatGeobufSink.writeStream(src.frame(req), src.projection, out)
-        case "csv"  => CsvWktSink.writeStream(src.frame(req), src.projection, out)
-        case "gpx"  => GpxSink.writeStream(src.frame(req), src.projection, out)
-        case "mif"  => MifSink.writeStream(src.frame(req), src.projection, out)
-        case "dxf"  => DxfSink.writeStream(src.frame(req), src.projection, out)
-        case "tab"  => TabSink.writeStream(src.frame(req), src.projection, out)
-        case _      => KmlSink.writeStream(src.frame(req), src.projection, out)
-      }
-      return out
-    }
+    val df = GeometryFileSink.project(source.frame(req), fields)
+    // the reference reads every tile through its guarded source
+    // (sources.py:148-157): past the geometry limit the tile raises before
+    // a byte is written, unless the request sets its own limit
+    if (req.limit.isEmpty) graft.raster.RequestGuards.collectGeometries(df)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(url))
+    val hash = java.security.MessageDigest.getInstance("MD5")
+      .digest(req.toString.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(7)
+    f.write(df, source.projection, s"$url/$hash.${f.name}")
+  }
+
+  private def writePartitioned(req: GeometryRequest)(implicit spark: SparkSession): String = {
     val df = source.frame(req)
     val cols = fields.getOrElse(df.columns.toSeq.filterNot(_ == "geometry"))
     format match {
@@ -121,29 +115,17 @@ case class GeometryFileSink(source: GeometryBlock, url: String,
   }
 }
 
-/** Driver-side adapter handing a pre-built frame to the single-file sinks
-  * (mergeFiles only; the frame rides outside the product so token/serde
-  * see just the schema). */
-case class MergedFrameBlock(cols: Set[String], proj: String)(
-    @transient val df: DataFrame) extends GeometryBlock {
-  override def columns: Set[String] = cols
-  override def projection: String = proj
-  override def frame(req: GeometryRequest)(implicit spark: SparkSession): DataFrame = df
-}
-
-/** Column-projected view of a block (the sink's `fields` subset). */
-case class ProjectedGeometryBlock(source: GeometryBlock, keep: Set[String])
-    extends GeometryBlock {
-  override def columns: Set[String] = source.columns intersect keep
-  override def projection: String = source.projection
-  override def frame(req: GeometryRequest)(implicit spark: SparkSession): DataFrame = {
-    val df = source.frame(req)
-    val cols = df.columns.filter(c => c == "fid" || keep.contains(c))
-    df.select(cols.map(col).toIndexedSeq: _*)
-  }
-}
-
 object GeometryFileSink {
+  /** `df` cut to its fid, its geometry and `fields` (every column when
+    * None): the sink's and `to_file`'s column subset. */
+  private[geometry] def project(df: DataFrame, fields: Option[Seq[String]]): DataFrame =
+    fields match {
+      case Some(cols) =>
+        val keep = df.columns.filter(c => c == "fid" || c == "geometry" || cols.contains(c))
+        df.select(keep.map(col).toIndexedSeq: _*)
+      case None => df
+    }
+
   /** Merge the per-request tile files this sink wrote into one file, like
     * the reference's `GeometryFileSink.merge_files` (sinks.py:172-216):
     * every `.<ext>` file under `path` is read back through the codec and
@@ -154,10 +136,12 @@ object GeometryFileSink {
     // (sinks.py:180) — never silently overwrite a previous export
     if (new java.io.File(target).exists()) throw new java.io.IOException(
       s"Target '$target' already exists")
-    val ext = target.substring(target.lastIndexOf('.') + 1).toLowerCase
+    val fmt = VectorFormat.forOutput(target).getOrElse(
+      throw new IllegalArgumentException(s"mergeFiles supports ${
+        VectorFormat.all.flatMap(_.extensions).mkString("/")} targets, not $target"))
     val parts = Option(new java.io.File(path).listFiles).toSeq.flatten
-      .filter(_.getName.toLowerCase.endsWith("." + ext)).sortBy(_.getName)
-    require(parts.nonEmpty, s"no .$ext files under $path to merge")
+      .filter(f => VectorFormat.forInput(f.getName).contains(fmt)).sortBy(_.getName)
+    require(parts.nonEmpty, s"no .${fmt.name} files under $path to merge")
     val sources = parts.map(f => GeometryFileSource(f.getAbsolutePath))
     val frames = sources.map(_.frame(GeometryRequest()))
     val merged = frames.reduce(_ unionByName _)
@@ -165,22 +149,7 @@ object GeometryFileSink {
     // toLocalIterator path, so totals far beyond the per-request geometry
     // guard export with bounded driver memory (reference merge_files
     // appends tile-by-tile through one OGR handle the same way)
-    val proj = sources.head.projection
-    ext match {
-      case "shp"  => ShapefileSink.writeStream(merged, proj, target)
-      case "gpkg" => GeoPackageSink.writeStream(merged, proj, target)
-      case "gml"  => GmlSink.writeStream(merged, proj, target)
-      case "fgb"  => FlatGeobufSink.writeStream(merged, proj, target)
-      case "csv"  => CsvWktSink.writeStream(merged, proj, target)
-      case "kml"  => KmlSink.writeStream(merged, proj, target)
-      case "gpx"  => GpxSink.writeStream(merged, proj, target)
-      case "mif"  => MifSink.writeStream(merged, proj, target)
-      case "dxf"  => DxfSink.writeStream(merged, proj, target)
-      case "tab"  => TabSink.writeStream(merged, proj, target)
-      case "geojson" | "json" => GeoJsonSink.writeStream(merged, proj, target)
-      case other  => throw new IllegalArgumentException(
-        s"mergeFiles supports shp/gpkg/gml/fgb/csv/kml/gpx/mif/dxf/tab/geojson targets, not .$other")
-    }
+    fmt.write(merged, sources.head.projection, target)
     if (removeSource) parts.foreach(_.delete())
     target
   }
@@ -246,54 +215,17 @@ case class GeoParquetSource(url: String, proj: String = "EPSG:28992")
 object GeometryToFile {
   def toFile(source: GeometryBlock, url: String, format: String = "geoparquet",
       fields: Option[Seq[String]] = None)(implicit spark: SparkSession): String = {
-    val lower = url.toLowerCase
     // single-file OGR-style formats dispatch on extension, like the
     // reference's to_file — exported through the codecs' STREAMING writers,
     // so totals beyond the per-request geometry guard work (the reference
     // achieves the same with GeometryTiler tiles + merge_files,
     // sinks.py:224-284); everything else goes through the partitioned sink
-    def frame = {
-      val df = source.frame(GeometryRequest(mode = "centroid"))
-      fields match {
-        case Some(cols) =>
-          val keep = df.columns.filter(c =>
-            c == "fid" || c == "geometry" || cols.contains(c))
-          df.select(keep.map(col).toIndexedSeq: _*)
-        case None => df
-      }
+    VectorFormat.forOutput(url) match {
+      case Some(f) => f.write(GeometryFileSink.project(
+        source.frame(GeometryRequest(mode = "centroid")), fields), source.projection, url)
+      case None => GeometryFileSink(source, url, format, fields)
+        .write(GeometryRequest(mode = "centroid"))
     }
-    if (lower.endsWith(".shp"))
-      ShapefileSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".gpkg"))
-      GeoPackageSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".gml"))
-      GmlSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".fgb"))
-      FlatGeobufSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".csv"))
-      CsvWktSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".kml"))
-      KmlSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".gpx"))
-      GpxSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".mif"))
-      MifSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".dxf"))
-      DxfSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".tab"))
-      TabSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".geojson") || lower.endsWith(".json"))
-      GeoJsonSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".kmz")) {
-      // OGC KML 2.2 §5.2: a kmz is a zip whose main document is doc.kml
-      val tmp = java.nio.file.Files.createTempFile("graft_kmz", ".kml")
-      try {
-        KmlSink.writeStream(frame, source.projection, tmp.toString)
-        ZipVector.writeSingle(url, "doc.kml", tmp.toString)
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-    }
-    else GeometryFileSink(source, url, format, fields)
-      .write(GeometryRequest(mode = "centroid"))
   }
 }
 

@@ -22,14 +22,17 @@ object ZipVector {
 
   /** Extractions by the archive's stamp (`SessionMemo.stamp`): a
     * rewritten archive is extracted afresh. JVM-global, as an extracted
-    * directory does not depend on the session. */
+    * directory does not depend on the session; each directory is removed
+    * when the JVM exits, not before, since a source opened on a superseded
+    * extraction still reads its files. */
   private val extracted =
     new java.util.concurrent.ConcurrentHashMap[Seq[(String, Long, Long)], Path]()
 
   /** Extract the archive (memoized) and return the primary vector file
-    * inside: `.kmz` → the first `.kml` (conventionally doc.kml); `.zip` →
-    * the first `.shp`, else the first file with a known vector extension. */
-  def primaryFile(url: String): String = {
+    * inside: the first file (by name) with the first of `candidates` that
+    * any file has — a `.kmz`'s `.kml` (conventionally doc.kml), or a
+    * `.zip`'s dataset by [[VectorFormat.readable]], the shapefile first. */
+  def primaryFile(url: String, candidates: Seq[String]): String = {
     import graft.io.FileIO
     require(FileIO.exists(url) && !FileIO.isDirectory(url),
       s"no such archive: $url")
@@ -43,17 +46,15 @@ object ZipVector {
     val sorted = all.sortBy(_.getFileName.toString.toLowerCase)
     def byExt(ext: String): Option[Path] =
       sorted.find(_.getFileName.toString.toLowerCase.endsWith(ext))
-    val primary =
-      if (url.toLowerCase.endsWith(".kmz")) byExt(".kml")
-      else byExt(".shp").orElse(Seq(".gpkg", ".geojson", ".json", ".gml",
-        ".fgb", ".csv", ".kml").view.flatMap(byExt).headOption)
-    primary.getOrElse(throw new IllegalArgumentException(
+    candidates.view.flatMap(byExt).headOption.getOrElse(throw new IllegalArgumentException(
       s"archive $url contains no recognized vector dataset " +
         s"(entries: ${sorted.map(_.getFileName).mkString(", ")})")).toString
   }
 
   private def extract(url: String): Path = {
     val root = Files.createTempDirectory("graft_zip")
+    // deleteOnExit runs in reverse registration order: entries, then root
+    root.toFile.deleteOnExit()
     // ZipFile needs random access on a LOCAL file: a scheme-qualified
     // archive is fetched once into a temp copy (zipped containers are
     // bounded by the single-file exchange contract)
@@ -66,7 +67,14 @@ object ZipVector {
         finally in.close()
         t.toString
       } else url
-    val zf = new ZipFile(localZip)
+    try unzip(url, localZip, root)
+    finally if (localZip != url) Files.deleteIfExists(Paths.get(localZip))
+  }
+
+  /** Inflate every entry of the local archive `zip` (the copy of `url`)
+    * into `root`. */
+  private def unzip(url: String, zip: String, root: Path): Path = {
+    val zf = new ZipFile(zip)
     try {
       var total = 0L
       val entries = zf.entries()
@@ -81,6 +89,7 @@ object ZipVector {
           val target = root.resolve(name).normalize()
           require(target.startsWith(root),
             s"archive $url entry '${e.getName}' escapes the extraction root")
+          target.toFile.deleteOnExit()
           val in = zf.getInputStream(e)
           val out = Files.newOutputStream(target)
           try {

@@ -37,7 +37,14 @@ object RequestGuards {
       s"Request exceeds limit of $rasterLimitTimesteps timesteps")
   }
 
-  def checkGeometryCount(n: Long): Unit =
-    require(n <= geometryLimit,
-      s"Object limit of $geometryLimit features exceeded")
+  /** The rows of `df`, under the reference's geometry-limit guard
+    * (geometry/sources.py:148-157): at most [[geometryLimit]] + 1 rows are
+    * pulled, and more than the limit raises instead of returning. */
+  def collectGeometries(df: org.apache.spark.sql.DataFrame): Array[org.apache.spark.sql.Row] = {
+    val cap = geometryLimit
+    val rows = df.limit(cap + 1).collect()
+    if (rows.length > cap) throw new IllegalArgumentException(
+      s"The amount of returned geometries exceeded the maximum of $cap geometries.")
+    rows
+  }
 }

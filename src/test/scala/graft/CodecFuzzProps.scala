@@ -6,7 +6,7 @@ import java.util.concurrent.{Callable, FutureTask, TimeUnit, TimeoutException}
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.rng.Seed
 
-import graft.geometry.{GeomFunctions, Gml, Shapefile, Sqlite, GeoPackage}
+import graft.geometry.{GeomFunctions, Gml, Shapefile, ShapefileSink, Sqlite, GeoPackage}
 import graft.raster.{Bbox, GeoTiff}
 
 /** Byte-level fuzzing of the pure-JVM codecs (shapefile, SQLite/GeoPackage,
@@ -33,16 +33,15 @@ object CodecFuzzProps extends Properties("codec-fuzz") {
   /** Pristine shapefile trio (shp/shx/dbf) of 40 mixed polygons. */
   private lazy val shpFixture: (Array[Byte], Array[Byte], Array[Byte], Shapefile.DbfHeader) = {
     val base = tmpRoot.resolve("pristine")
+    val spark = TestSpark.spark
+    import spark.implicits._
     val rows = (0 until 40).map { i =>
       val g = GeomFunctions.readWkt(GeometryFixtures.square(i, 0, i + 1 + (i % 3), 2))
-      (g, Seq[Any](i.toLong, i * 0.25, s"name-$i"))
+      (i.toLong, i * 0.25, s"name-$i", GeomFunctions.writeWkb(g))
     }
-    val fields = Shapefile.dbfFieldsFor(
-      Seq(("id", org.apache.spark.sql.types.LongType),
-        ("v", org.apache.spark.sql.types.DoubleType),
-        ("name", org.apache.spark.sql.types.StringType)),
-      rows.map(_._2))
-    Shapefile.write(base.toString + ".shp", rows, fields, "EPSG:28992")
+    // no fid column: records keep the rows' order
+    ShapefileSink.writeStream(rows.toDF("id", "v", "name", "geometry"),
+      "EPSG:28992", base.toString + ".shp")(spark)
     val shp = Files.readAllBytes(Paths.get(base.toString + ".shp"))
     val shx = Files.readAllBytes(Paths.get(base.toString + ".shx"))
     val dbf = Files.readAllBytes(Paths.get(base.toString + ".dbf"))

@@ -123,13 +123,14 @@ object CodecRoundTripProps extends Properties("codec-roundtrip") {
     val block = SeqGeometrySource(rows,
       proj = if (ext == "geojson") "EPSG:4326" else "EPSG:28992")
     val source: GeometryBlock = ext match {
-      case "shp"  => ShapefileSink.write(block, out, GeometryRequest()); GeometryFileSource(out)
-      case "gpkg" => GeoPackageSink.write(block, out, GeometryRequest()); GeometryFileSource(out)
-      case "gml"  => GmlSink.write(block, out, GeometryRequest()); GeometryFileSource(out)
       case "geojson" =>
         val dir = tmpRoot.resolve(s"rtdir_${counter.get()}").toString
         GeometryFileSink(block, dir, "geojson").write(GeometryRequest())
         GeoJsonSource(dir)
+      case _ =>
+        VectorFormat.forOutput(out).get
+          .write(block.frame(GeometryRequest()), block.projection, out)
+        GeometryFileSource(out)
     }
     val back = source.frame(GeometryRequest())
       .select(col("fid"), col("geometry"), col("value"), col("name"))

@@ -11,6 +11,10 @@ class GeoPackageSpec extends SparkSpec {
 
   private val path = getClass.getResource("/fixture.gpkg").getPath
 
+  /** `block` exported through the one GeoPackage writer. */
+  private def export(block: GeometryBlock, out: String): String =
+    GeoPackageSink.writeStream(block.frame(GeometryRequest()), block.projection, out)
+
   test("sqlite master and gpkg metadata are readable") {
     val m = Sqlite.master(path)
     assert(m.exists(r => r.kind == "table" && r.name == "plots"))
@@ -71,7 +75,7 @@ class GeoPackageSpec extends SparkSpec {
   test("GeoPackageSink writes a file the source round-trips exactly") {
     val out = java.nio.file.Files.createTempDirectory("gpkg_sink")
       .resolve("export.gpkg").toString
-    GeoPackageSink.write(GeometryFixtures.features, out, GeometryRequest())
+    export(GeometryFixtures.features, out)
     val src = GeoPackageSource(out)
     assert(src.projection == "EPSG:28992")
     assert(src.columns == Set("value", "name", "geometry"))
@@ -97,7 +101,7 @@ class GeoPackageSpec extends SparkSpec {
     }
     val out = java.nio.file.Files.createTempDirectory("gpkg_sink_big")
       .resolve("big.gpkg").toString
-    GeoPackageSink.write(SeqGeometrySource(rows), out, GeometryRequest())
+    export(SeqGeometrySource(rows), out)
     val df = GeoPackageSource(out).frame(GeometryRequest()).cache()
     assert(df.count() == 3000)
     val r97 = df.filter(col("fid") === 97).head()

@@ -8,6 +8,10 @@ import graft.geometry._
   * + xsd sidecar writer, and the lineSep-split distributed reader. */
 class GmlSpec extends SparkSpec {
 
+  /** `block` exported through the one GML writer. */
+  private def export(block: GeometryBlock, out: String): String =
+    GmlSink.writeStream(block.frame(GeometryRequest()), block.projection, out)
+
   private def roundTripGeom(wkt: String): Unit = {
     val g = GeomFunctions.readWkt(wkt)
     val member =
@@ -61,7 +65,7 @@ class GmlSpec extends SparkSpec {
   test("sink writes a document + xsd the source round-trips exactly") {
     val dir = java.nio.file.Files.createTempDirectory("gml_sink")
     val out = dir.resolve("export.gml").toString
-    GmlSink.write(GeometryFixtures.features, out, GeometryRequest())
+    export(GeometryFixtures.features, out)
     assert(new java.io.File(dir.resolve("export.xsd").toString).isFile)
 
     val src = GmlSource(out)
@@ -96,7 +100,7 @@ class GmlSpec extends SparkSpec {
   test("typed attrs, escaping, and nulls survive the round-trip") {
     val out = java.nio.file.Files.createTempDirectory("gml_mixed")
       .resolve("mixed.gml").toString
-    GmlSink.write(MixedSource(), out, GeometryRequest())
+    export(MixedSource(), out)
 
     val df = GmlSource(out).frame(GeometryRequest()).cache()
     assert(df.count() == 3)
@@ -137,7 +141,7 @@ class GmlSpec extends SparkSpec {
   test("XML-hostile column names are sanitized on write, in document and xsd") {
     val out = java.nio.file.Files.createTempDirectory("gml_names")
       .resolve("names.gml").toString
-    GmlSink.write(HostileNamesSource(), out, GeometryRequest())
+    export(HostileNamesSource(), out)
     val src = GmlSource(out)
     // "my col" → my_col collides with the real my_col column → suffixed
     assert(src.columns == Set("geometry", "my_col", "a_b", "my_col_2"),
@@ -163,7 +167,7 @@ class GmlSpec extends SparkSpec {
   test("spatial/attribute filters and limit apply on read") {
     val out = java.nio.file.Files.createTempDirectory("gml_filters")
       .resolve("filters.gml").toString
-    GmlSink.write(GeometryFixtures.features, out, GeometryRequest())
+    export(GeometryFixtures.features, out)
     val src = GmlSource(out)
     assert(src.frame(GeometryRequest(filters = Map("name" -> "b")))
       .select("fid").collect().map(_.getLong(0)).toSeq == Seq(2L))
@@ -180,7 +184,7 @@ class GmlSpec extends SparkSpec {
     }
     val out = java.nio.file.Files.createTempDirectory("gml_big")
       .resolve("big.gml").toString
-    GmlSink.write(SeqGeometrySource(rows), out, GeometryRequest())
+    export(SeqGeometrySource(rows), out)
     val df = GmlSource(out).frame(GeometryRequest())
     assert(df.count() == 5000)
     val sum = df.agg(org.apache.spark.sql.functions.sum("value")).head().getDouble(0)
@@ -207,7 +211,7 @@ class GmlSpec extends SparkSpec {
   test("a garbage srsName in the head does not override the proj fallback") {
     val dir = java.nio.file.Files.createTempDirectory("gml_badsrs")
     val out = dir.resolve("bad.gml").toString
-    GmlSink.write(GeometryFixtures.features, out, GeometryRequest())
+    export(GeometryFixtures.features, out)
     val doctored = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out)), "UTF-8")
       .replaceFirst("srsName=\"[^\"]+\"", "srsName=\"urn:bogus:nothing\"")

@@ -39,4 +39,21 @@ class GuardSpec extends SparkSpec {
       assert(feats.getFeatures(GeometryRequest(limit = Some(3))).size == 3)
     } finally RequestGuards.geometryLimit = prev
   }
+
+  test("a single-file sink tile past the geometry limit raises before writing") {
+    val pts = SeqGeometrySource((1 to 8).map(i =>
+      (i.toLong, s"POINT ($i 0)", i.toDouble, s"p$i")))
+    val dir = java.nio.file.Files.createTempDirectory("guard_tile").toString
+    val prev = RequestGuards.geometryLimit
+    try {
+      RequestGuards.geometryLimit = 5
+      val e = intercept[IllegalArgumentException](
+        GeometryFileSink(pts, dir, "fgb").write(GeometryRequest()))
+      assert(e.getMessage.contains("maximum of 5"))
+      assert(new java.io.File(dir).listFiles.isEmpty) // no tile file
+      // an explicit request limit bounds the tile instead of the guard
+      val out = GeometryFileSink(pts, dir, "fgb").write(GeometryRequest(limit = Some(3)))
+      assert(GeometryFileSource(out).frame(GeometryRequest()).count() == 3)
+    } finally RequestGuards.geometryLimit = prev
+  }
 }

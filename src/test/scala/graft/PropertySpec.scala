@@ -104,7 +104,7 @@ class PropertySpec extends AnyFunSuite {
       RequestGuards.checkRaster(req, 1)
     }
     intercept[IllegalArgumentException] {
-      RequestGuards.checkGeometryCount(20000)
+      RequestGuards.collectGeometries(TestSpark.spark.range(20000).toDF())
     }
     RequestGuards.checkRaster(RasterRequest(Bbox(0, 0, 1, 1), "EPSG:28992", 256, 256), 3)
   }

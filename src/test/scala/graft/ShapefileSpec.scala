@@ -133,7 +133,8 @@ class ShapefileSpec extends SparkSpec {
 
   test("ShapefileSink exports a block and ShapefileSource reopens it") {
     val path = tmpShp("sink")
-    ShapefileSink.write(GeometryFixtures.features, path, GeometryRequest())
+    ShapefileSink.writeStream(GeometryFixtures.features.frame(GeometryRequest()),
+      GeometryFixtures.features.projection, path)
     val back = ShapefileSource(path)
     assert(back.columns == Set("fid", "value", "name", "geometry"))
     val df = back.frame(GeometryRequest())
@@ -144,6 +145,25 @@ class ShapefileSpec extends SparkSpec {
     assert(df.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
     assert(df.map(_.getDouble(1)).toSeq == Seq(42.0, 7.5, -1.0))
     assert(math.abs(df(0).getDouble(3) - 1.0) < 1e-9)
+  }
+
+  /** The feature fixture plus a timestamp attribute. */
+  private case class StampedSource() extends GeometryBlock {
+    override def columns: Set[String] = GeometryFixtures.features.columns + "at"
+    override def frame(req: GeometryRequest)(
+        implicit spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame =
+      GeometryFixtures.features.frame(req)
+        .withColumn("at", lit("2024-01-01 00:00:00").cast("timestamp"))
+  }
+
+  test("a timestamp attribute exports as its string cast and reads back") {
+    // the DBF C width is sized from the string cast; the record writer must
+    // write that same text (java.sql.Timestamp.toString adds ".0")
+    val path = tmpShp("stamp")
+    GeometryToFile.toFile(StampedSource(), path)
+    val back = GeometryFileSource(path).frame(GeometryRequest()).orderBy("fid")
+      .select("fid", "at").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(back == Seq(1L, 2L, 3L).map(_ -> "2024-01-01 00:00:00"))
   }
 
   test("a WKT .prj (ArcGIS-authored) resolves to its EPSG code") {

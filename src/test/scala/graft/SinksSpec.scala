@@ -117,11 +117,18 @@ class SinksSpec extends SparkSpec {
     assert(cols == Set("name", "geometry"), cols.toString)
   }
 
-  test("fgb and kml tiles write and mergeFiles combines them") {
+  test("every single-file format's tiles write and mergeFiles combines them") {
     import org.apache.spark.sql.functions.col
-    for (fmt <- Seq("fgb", "kml")) {
+    // GPX holds no polygons: it tiles the fixture's centroids instead
+    val points = SeqGeometrySource(GeometryFixtures.features.rows.map {
+      case (fid, wkt, v, name) =>
+        (fid, GeomFunctions.readWkt(wkt).getCentroid.toText, v, name)
+    })
+    // the sink's "geojson" is the partitioned writer, not a tile format
+    for (fmt <- VectorFormat.all.map(_.name).filterNot(_ == "geojson")) {
       val dir = Files.createTempDirectory(s"sink_tiles_$fmt").toString
-      val sink = GeometryFileSink(GeometryFixtures.features, dir, fmt)
+      val src = if (fmt == "gpx") points else GeometryFixtures.features
+      val sink = GeometryFileSink(src, dir, fmt)
       sink.write(GeometryRequest(mode = "centroid",
         geometryWkt = Some(GeometryFixtures.square(134999, 455997, 135000.9, 456001))))
       sink.write(GeometryRequest(mode = "centroid",

@@ -72,9 +72,36 @@ class ZipVectorSpec extends SparkSpec {
     } finally zout.close()
     val local = GeometryFileSource(zip).frame(GeometryRequest())
       .orderBy("fid").collect().map(_.getLong(0)).toSeq
+    def copies = Option(new java.io.File(System.getProperty("java.io.tmpdir"))
+      .listFiles).toSeq.flatten.map(_.getName)
+      .filter(_.startsWith("graft_zip_src")).toSet
+    val before = copies
     val viaScheme = GeometryFileSource(s"file://$zip").frame(GeometryRequest())
       .orderBy("fid").collect().map(_.getLong(0)).toSeq
     assert(viaScheme == local && local.nonEmpty)
+    // the local copy of the archive is gone once it is extracted
+    assert(copies.subsetOf(before), (copies -- before).toString)
+  }
+
+  test("a zipped MapInfo TAB set reads like the unzipped one") {
+    val dir = java.nio.file.Files.createTempDirectory("ziptab")
+    GeometryToFile.toFile(GeometryFixtures.features, dir.resolve("parcels.tab").toString)
+    val zip = dir.resolve("parcels.zip").toString
+    val zout = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(zip))
+    try {
+      // every file of the set (.tab/.dat/.map/.id and any .prj)
+      dir.toFile.listFiles.filter(_.getName.startsWith("parcels."))
+        .filterNot(_.getName.endsWith(".zip")).foreach { f =>
+          zout.putNextEntry(new java.util.zip.ZipEntry(s"tab/${f.getName}"))
+          zout.write(java.nio.file.Files.readAllBytes(f.toPath))
+          zout.closeEntry()
+        }
+    } finally zout.close()
+    val src = GeometryFileSource(zip)
+    assert(src.projection == GeometryFileSource(dir.resolve("parcels.tab").toString).projection)
+    val df = src.frame(GeometryRequest()).orderBy("fid").collect()
+    assert(df.map(_.getAs[Long]("fid")).toSeq == Seq(1L, 2L, 3L))
+    assert(df.map(_.getAs[String]("name")).toSeq == Seq("a", "b", "c"))
   }
 
   test("non-zip bytes and vector-less archives fail loudly") {
@@ -111,7 +138,7 @@ class ZipVectorSpec extends SparkSpec {
         java.nio.file.attribute.FileTime.fromMillis(mtime))
     }
     def extracted = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(ZipVector.primaryFile(s"file://$zip")))
+      java.nio.file.Paths.get(ZipVector.primaryFile(s"file://$zip", VectorFormat.readable)))
     write("""{"v": 1.5}""", 1600000000000L)
     val size = java.nio.file.Files.size(java.nio.file.Paths.get(zip))
     assert(extracted == """{"v": 1.5}""")
