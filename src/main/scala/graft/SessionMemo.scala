@@ -11,12 +11,14 @@ import org.apache.spark.sql.SparkSession
   * they change; every lookup stamps them again. A path that cannot be
   * stamped (a glob, a missing file) is never memoized.
   *
-  * `retain` makes a built value the memoized one (a persist); `release`
-  * runs on a dropped one, stale or pushed out of the session's LRU of
-  * `maxEntries`. A stale entry is released, and every plan Spark caches
-  * over its paths refreshed (`refreshByPath`, other sessions' too),
-  * BEFORE the rebuild: Spark's `CacheManager` would match the new read to
-  * the old persisted plan, whose file index compares only root paths.
+  * `retain` makes a built value the memoized one (a checkpoint); `release`
+  * runs on a dropped one (an unpersist), stale or pushed out of the
+  * session's LRU of `maxEntries`. A stale entry is released, and every
+  * plan Spark caches over its paths refreshed (`refreshByPath`, other
+  * sessions' too), BEFORE the rebuild: Spark's `CacheManager` would match
+  * the new read to an old persisted plan over the path, whose file index
+  * compares only root paths. The engine's own memoized frames are not in
+  * that cache (`FrameCache` holds leaf plans over persisted RDDs).
   *
   * Per session ([[PerSession]]); a DataFrame value keeps its session
   * reachable until dropped. Threads missing one key build it once, the

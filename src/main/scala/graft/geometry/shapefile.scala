@@ -416,16 +416,6 @@ object Shapefile {
     }
   }
 
-  /** Write one complete shapefile set (.shp/.shx/.dbf/.prj). `rows` carry
-    * (geometry, attrs) aligned with `fields`; attrs hold Long/Double/String/
-    * Boolean/java.sql.Date or null. */
-  def write(shpPath: String, rows: Seq[(Geometry, Seq[Any])],
-      fields: Seq[DbfField], proj: String): Unit = {
-    val w = new StreamWriter(shpPath, fields, proj)
-    rows.foreach { case (g, attrs) => w.append(g, attrs) }
-    w.close()
-  }
-
   private def formatNumeric(v: Any, f: DbfField): String = {
     val s = v match {
       case null => ""

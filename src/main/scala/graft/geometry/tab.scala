@@ -257,19 +257,6 @@ object Tab {
 
   // ------------------------------------------------------------- write
 
-  /** Write the quartet in this codec's documented profile. `rows` are
-    * (geometry-or-null, attribute strings) aligned with `fields`
-    * ((name, tabType) — Integer/Float/Char(n)/Logical). EPSG:4326 gets
-    * the public `CoordSys Earth Projection 1, 104` clause; any other
-    * CRS rides in a `.prj` sidecar exactly like the MIF sink. */
-  def write(url: String, fields: Seq[(String, String)],
-      rows: Seq[(Geometry, Seq[String])], projection: String): Unit = {
-    val env = new org.locationtech.jts.geom.Envelope()
-    rows.foreach { case (g, _) => if (g != null)
-      env.expandToInclude(g.getEnvelopeInternal) }
-    writeStreaming(url, fields, rows.iterator, rows.length, env, projection)
-  }
-
   /** Byte-counting buffered file stream: the .map record offsets ARE
     * the running byte count, so nothing needs buffering in memory (a
     * 20M-feature export overflowed the old whole-file array buffer at
@@ -283,10 +270,14 @@ object Tab {
     def close(): Unit = out.close()
   }
 
-  /** Single-pass STREAMING quartet write: `env`/`n` arrive precomputed
-    * (the sink derives them distributed), `rows` is consumed once, and
-    * .map/.id/.dat stream to disk concurrently — driver memory is O(1)
-    * in the feature count. */
+  /** Single-pass STREAMING quartet write in this codec's documented
+    * profile: `env`/`n` arrive precomputed (the sink derives them
+    * distributed), `rows` is consumed once, and .map/.id/.dat stream to
+    * disk concurrently — driver memory is O(1) in the feature count.
+    * `rows` are (geometry-or-null, attribute strings) aligned with
+    * `fields` ((name, tabType) — Integer/Float/Char(n)/Logical). EPSG:4326
+    * gets the public `CoordSys Earth Projection 1, 104` clause; any other
+    * CRS rides in a `.prj` sidecar exactly like the MIF sink. */
   def writeStreaming(url: String, fields: Seq[(String, String)],
       rows: Iterator[(Geometry, Seq[String])], n: Int,
       env: org.locationtech.jts.geom.Envelope, projection: String): Unit = {

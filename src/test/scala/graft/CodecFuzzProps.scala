@@ -962,8 +962,11 @@ object CodecFuzzProps extends Properties("codec-fuzz") {
           new org.locationtech.jts.geom.Coordinate(0 + i, 0)))
       (g, Seq(i.toString, s"row$i"))
     }
-    graft.geometry.Tab.write(dir.resolve("f.tab").toString,
-      Seq("fid" -> "Integer", "name" -> "Char (12)"), rows, "EPSG:4326")
+    val env = new org.locationtech.jts.geom.Envelope()
+    rows.foreach { case (g, _) => env.expandToInclude(g.getEnvelopeInternal) }
+    graft.geometry.Tab.writeStreaming(dir.resolve("f.tab").toString,
+      Seq("fid" -> "Integer", "name" -> "Char (12)"), rows.iterator, rows.length, env,
+      "EPSG:4326")
     dir.toString
   }
 

@@ -65,7 +65,37 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("HashJoin") || p.contains("SortMergeJoin"))
   }
 
+  /** The formatted plan of `df`. */
+  private def explain(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+
   test("cross-CRS table-raster request gathers tiles via broadcast join") {
+    import graft.raster._
+    import java.time.Instant
+    import spark.implicits._
+    // two native tiles across (256 + 44 columns), one frame
+    val (w, h) = (300, 4)
+    val path = java.nio.file.Files.createTempDirectory("plan_wide")
+      .resolve("events.parquet").toString
+    (0 until w * h).map(i => (i.toLong, i.toDouble)).toDF("event_id", "value")
+      .write.parquet(path)
+    val src = TableRasterSource(path, "event_id", "value", 1, w, h)
+    val t0 = Some(Instant.ofEpochMilli(0))
+    val native = src.frame(RasterRequest(Bbox(0, 0, w, h), "EPSG:28992", w, h, t0, t0))
+    val (x1, y1) = Proj.transform("EPSG:28992", "EPSG:3857", 0, 0)
+    val (x2, y2) = Proj.transform("EPSG:28992", "EPSG:3857", w, h)
+    // one output tile across the whole grid samples both native tiles
+    val warp = WarpStage.plan(
+      RasterRequest(Bbox(x1, y1, x2, y2), "EPSG:3857", w / 2, h, t0, t0), "EPSG:28992", w, h)
+    assert(!warp.mapOnly, "the request must span native tiles")
+    // the gather the FrameCache entry is built from, over the cached
+    // native frame (a one-node leaf, so every join below is the gather's)
+    val p = explain(WarpStage.frame(warp, src.noDataValue, Seq(0L), native))
+    assert(p.contains("BroadcastHashJoin"))
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
+  }
+
+  test("map-only cross-CRS table-raster request plans no join and no exchange") {
     import graft.raster._
     import java.time.Instant
     val g = QueryLib.eventsGrid(spark, dir)
@@ -74,10 +104,11 @@ class PlanSpec extends SparkSpec {
     val (x2, y2) = Proj.transform("EPSG:28992", "EPSG:3857", g.w, g.h)
     val req = RasterRequest(Bbox(x1, y1, x2, y2), "EPSG:3857", g.w, g.h,
       Some(Instant.ofEpochMilli(0)), Some(Instant.ofEpochMilli(3600000L)))
-    val p = src.frame(req)(spark).queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert(p.contains("BroadcastHashJoin"))
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
+    // every output tile samples the one native tile of the sf0.001 grid
+    assert(WarpStage.plan(req, src.projection, g.w, g.h).mapOnly)
+    val p = explain(src.frame(req)(spark))
+    assert(!p.contains("Join") && !p.contains("CartesianProduct") && !p.contains("Exchange"), p)
+    assert(p.contains(s"Scan ExistingRDD ${src.graphName}"), p)
   }
 
   test("sessionization stays within one exchange per stage chain") {
@@ -100,8 +131,8 @@ class PlanSpec extends SparkSpec {
     val src = QueryLib.eventsRaster(dir, g)
     val stamped = Place(src, "EPSG:28992", (50.0, g.h / 2.0),
       Seq((25.0, g.h / 2.0), (75.0, g.h / 2.0)), "max", Some("warp"))
-    val p = stamped.frame(QueryLib.fullReq(g))(spark).queryExecution
-      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    val df = stamped.frame(QueryLib.fullReq(g))(spark)
+    val p = explain(df)
     assert(p.contains("BroadcastHashJoin"))
     // the tile-mapping build is a Spark job: an intended count-only
     // broadcast product of the coordinates frame with the output-tile
@@ -109,9 +140,18 @@ class PlanSpec extends SparkSpec {
     // the PIXEL gather itself must stay a broadcast hash equi-join
     assert("""\(\d+\) BroadcastNestedLoopJoin""".r.findAllIn(p).size == 1)
     assert(!p.contains("CartesianProduct"))
-    // and no driver materialization: the plan is a single lazy frame (the
-    // old path ran getData + parallelize, which left no join in the plan)
-    assert(p.contains("Scan parquet") || p.contains("FileScan"))
+    // and no driver materialization (the old path ran getData +
+    // parallelize): the pixels come from one scan of the cached native
+    // frame's RDD, named after the source Block, and no local relation
+    // carries pixels (the coordinates' LocalTableScan holds the Block's
+    // literal placements)
+    import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec}
+    val leaves = df.queryExecution.sparkPlan.collectLeaves()
+    assert(leaves.collect { case s: RDDScanExec => s.rdd.name } == Seq(src.graphName))
+    assert(!leaves.exists {
+      case l: LocalTableScanExec => l.output.exists(_.name == "values")
+      case _ => false
+    })
   }
 
   test("chunk dedup is one explode + one hash exchange on the chunk key") {

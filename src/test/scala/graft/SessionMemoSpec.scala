@@ -59,6 +59,27 @@ class SessionMemoSpec extends SparkSpec {
     }
   }
 
+  test("a rewrite drops the old frame's RDD from the persistent RDDs") {
+    import spark.implicits._
+    val (w, h) = (10, 6)
+    val rows = (0 until w * h).map(i => (i.toLong, i + 1.0))
+    val file = Files.createTempDirectory("memo_rdd").resolve("events.parquet")
+    parquetFile(rows.toDF("event_id", "value"), file, T0)
+    val table = TableRasterSource(file.toString, "event_id", "value", 1, w, h)
+    val native = RasterRequest(Bbox(0, 0, w, h), "EPSG:28992", w, h,
+      Some(Instant.ofEpochMilli(0)), Some(Instant.ofEpochMilli(0)))
+    def frameRdds = spark.sparkContext.getPersistentRDDs
+      .collect { case (id, r) if r.name == table.graphName => id }.toSet
+    val before = table.getData(native).get.values.head
+    val old = frameRdds
+    assert(old.size == 1)
+    parquetFile(rows.map { case (id, v) => (id, v * 2) }.toDF("event_id", "value"),
+      file, T0 + 60000)
+    assert(table.getData(native).get.values.head.toSeq == before.map(_ * 2).toSeq)
+    val now = frameRdds
+    assert(now.size == 1 && (now & old).isEmpty, s"$old then $now")
+  }
+
   test("eventsGrid picks up a rewritten events row count") {
     val dir = Files.createTempDirectory("memo_grid")
     def events(n: Long) = spark.range(n).selectExpr("id AS event_id", "id * 0.5 AS value")

@@ -12,11 +12,19 @@ class ShapefileSpec extends SparkSpec {
   private def tmpShp(name: String): String =
     Files.createTempDirectory("shp").resolve(name + ".shp").toString
 
+  /** `rows` as one shapefile set through the streaming writer. */
+  private def writeShp(path: String, rows: Seq[(org.locationtech.jts.geom.Geometry, Seq[Any])],
+      fields: Seq[Shapefile.DbfField], proj: String): Unit = {
+    val w = new Shapefile.StreamWriter(path, fields, proj)
+    rows.foreach { case (g, attrs) => w.append(g, attrs) }
+    w.close()
+  }
+
   private def roundTrip(wkts: Seq[String]): Seq[String] = {
     val path = tmpShp("rt")
     val geoms = wkts.map(w => if (w == null) null else wkt.read(w))
     val fields = Seq(Shapefile.DbfField("id", 'N', 18, 0))
-    Shapefile.write(path, geoms.zipWithIndex.map { case (g, i) =>
+    writeShp(path, geoms.zipWithIndex.map { case (g, i) =>
       (g, Seq[Any](i.toLong))
     }, fields, "EPSG:28992")
     val h = Shapefile.readDbfHeader(path.stripSuffix(".shp") + ".dbf")
@@ -57,7 +65,7 @@ class ShapefileSpec extends SparkSpec {
     // WKT with a CCW shell and CW hole — the writer must flip both
     val g = wkt.read(
       "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 4 2, 4 4, 2 4, 2 2))")
-    Shapefile.write(path, Seq((g, Seq[Any](1L))),
+    writeShp(path, Seq((g, Seq[Any](1L))),
       Seq(Shapefile.DbfField("id", 'N', 18, 0)), "EPSG:28992")
     val raf = new java.io.RandomAccessFile(path, "r")
     val bytes = try {
@@ -90,7 +98,7 @@ class ShapefileSpec extends SparkSpec {
       Seq[Any](-7L, -0.001, "x", false, null),
       Seq[Any](null, null, null, null, null))
     val geoms = rows.indices.map(i => wkt.read(s"POINT ($i 0)"))
-    Shapefile.write(path, geoms.zip(rows).toSeq, fields, "EPSG:28992")
+    writeShp(path, geoms.zip(rows).toSeq, fields, "EPSG:28992")
 
     val h = Shapefile.readDbfHeader(path.stripSuffix(".shp") + ".dbf")
     assert(h.fields == fields)
@@ -108,7 +116,7 @@ class ShapefileSpec extends SparkSpec {
       (wkt.read(GeometryFixtures.square(i, 0, i + 1, 1)),
         Seq[Any](i.toLong, s"f$i", i * 1.5))
     }
-    Shapefile.write(path, rows, fields, "EPSG:28992")
+    writeShp(path, rows, fields, "EPSG:28992")
 
     val src = ShapefileSource(path)
     assert(src.columns == Set("fid", "name", "value", "geometry"))
@@ -174,7 +182,7 @@ class ShapefileSpec extends SparkSpec {
     // the writer records the proj verbatim; hand it ESRI WKT like ArcGIS does
     val esriRd =
       """PROJCS["RD_New",GEOGCS["GCS_Amersfoort",DATUM["D_Amersfoort",SPHEROID["Bessel_1841",6377397.155,299.1528128]],PRIMEM["Greenwich",0.0],UNIT["Degree",0.0174532925199433]],PROJECTION["Double_Stereographic"],PARAMETER["False_Easting",155000.0],PARAMETER["False_Northing",463000.0],PARAMETER["Central_Meridian",5.38763888888889],PARAMETER["Scale_Factor",0.9999079],PARAMETER["Latitude_Of_Origin",52.1561605555556],UNIT["Meter",1.0]]"""
-    Shapefile.write(path, rows, fields, esriRd)
+    writeShp(path, rows, fields, esriRd)
     val src = ShapefileSource(path)
     assert(src.projection == "EPSG:28992")
     assert(src.frame(GeometryRequest()).count() == 1)
@@ -186,7 +194,7 @@ class ShapefileSpec extends SparkSpec {
     val rows = Seq((wkt.read(GeometryFixtures.square(0, 0, 1, 1)), Seq[Any](1L)))
     val krovak =
       """PROJCS["S-JTSK / Krovak East North",GEOGCS["S-JTSK",DATUM["S_JTSK",SPHEROID["Bessel 1841",6377397.155,299.1528128]],PRIMEM["Greenwich",0],UNIT["degree",0.0174532925199433]],PROJECTION["Krovak"],PARAMETER["latitude_of_center",49.5],PARAMETER["false_easting",0],PARAMETER["false_northing",0],UNIT["metre",1]]"""
-    Shapefile.write(path, rows, fields, krovak)
+    writeShp(path, rows, fields, krovak)
     val e = intercept[IllegalArgumentException](ShapefileSource(path))
     assert(e.getMessage.contains(path) && e.getMessage.contains("Krovak"))
   }

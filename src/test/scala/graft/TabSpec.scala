@@ -14,7 +14,7 @@ class TabSpec extends SparkSpec {
   // ------------------------------------------------ independent builder
 
   /** Hand-build a two-point quartet with one Integer + one Char field,
-    * byte-by-byte (separate from Tab.write). */
+    * byte-by-byte (separate from Tab.writeStreaming). */
   private def buildQuartet(base: String): Unit = {
     // .tab
     Files.writeString(Paths.get(s"$base.tab"),
@@ -181,8 +181,8 @@ class TabSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_tabr").toString
     val gf = new org.locationtech.jts.geom.GeometryFactory()
     val pt = gf.createPoint(new org.locationtech.jts.geom.Coordinate(4.5, 52.0))
-    Tab.write(s"$dir/t.tab", Seq("v" -> "Float"),
-      Seq((pt, Seq("0.1234565"))), "EPSG:4326")
+    Tab.writeStreaming(s"$dir/t.tab", Seq("v" -> "Float"),
+      Iterator((pt, Seq("0.1234565"))), 1, pt.getEnvelopeInternal, "EPSG:4326")
     val dat = new String(Files.readAllBytes(Paths.get(s"$dir/t.dat")),
       java.nio.charset.StandardCharsets.US_ASCII)
     assert(dat.contains("0.123457"), dat.takeRight(40))

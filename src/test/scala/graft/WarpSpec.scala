@@ -266,4 +266,50 @@ class WarpSpec extends SparkSpec {
     val (shadeAcross, _, _, _) = served(shade, across)
     assertCrop(shadeAcross, shadeFull, 1, 250)
   }
+
+  test("a map tile plans against one leaf: the cached native frame's named RDD") {
+    import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    implicit val spark: SparkSession = coldSession()
+    served(table, req(Bbox(0, 0, gw, gh), gw, gh))
+    val tile = req(Bbox(7, 3, 13, 9), 6, 6)
+    val df = table.frame(tile)
+    val analyzed = df.queryExecution.analyzed
+    assert(analyzed.collectLeaves().map(_.getClass) == Seq(classOf[LogicalRDD]), analyzed)
+    assert(analyzed.collect {
+      case r: LogicalRelation => r; case r: InMemoryRelation => r }.isEmpty, analyzed)
+    df.collect()
+    val executed = df.queryExecution.executedPlan
+    assert(executed.collect {
+      case p: AdaptiveSparkPlanExec => p; case p: InMemoryTableScanExec => p }.isEmpty, executed)
+    assert(executed.collectLeaves().collect { case s: RDDScanExec => s.rdd.name } ==
+      Seq(table.graphName), executed)
+    val (_, misses, jobs, shuffle) = served(table, tile)
+    assert(misses == 0 && jobs == 1 && shuffle == 0,
+      s"$misses misses, $jobs jobs, $shuffle shuffle bytes")
+    // a native frame, a gather and map-only tiles: none of them is a plan
+    // in Spark's cache
+    served(wide.table, req(Bbox(0, 0, 300, 4), 300, 4))
+    served(wide.table, req(Bbox(250, 1, 262, 3), 12, 2))
+    served(wide.table, req(Bbox(260, 0, 300, 4), 40, 4))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a frame whose RDD was unpersisted behind the memo's back recomputes " +
+      "from its lineage") {
+    implicit val spark: SparkSession = coldSession()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val full = req(Bbox(0, 0, gw, gh), gw, gh)
+    compare(full)
+    val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.values
+    assert(mine.map(_.name).toSeq == Seq(table.graphName))
+    mine.foreach(_.unpersist(blocking = true))
+    val m0 = FrameCache.missCount.get()
+    compare(req(Bbox(7, 3, 13, 9), 6, 6))
+    compare(full)
+    assert(FrameCache.missCount.get() == m0, "the memo still holds the frame")
+  }
 }

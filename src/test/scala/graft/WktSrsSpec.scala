@@ -181,9 +181,10 @@ class WktSrsSpec extends AnyFunSuite {
   test("the shapefile sink writes WKT .prj foreign tools can read") {
     val dir = java.nio.file.Files.createTempDirectory("prj_wkt")
     val path = dir.resolve("t.shp").toString
-    graft.geometry.Shapefile.write(path,
-      Seq((graft.geometry.GeomFunctions.readWkt("POINT (155000 463000)"), Seq[Any](1L))),
+    val w = new graft.geometry.Shapefile.StreamWriter(path,
       Seq(graft.geometry.Shapefile.DbfField("fid", 'N', 18, 0)), "EPSG:28992")
+    w.append(graft.geometry.GeomFunctions.readWkt("POINT (155000 463000)"), Seq[Any](1L))
+    w.close()
     val prj = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir.resolve("t.prj").toString)), "US-ASCII")
     assert(prj.startsWith("PROJCS[\"Amersfoort / RD New\""))
